@@ -4,6 +4,12 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main. Prints ONE machine-readable JSON line (last line of
   * stdout before sbt's `[success]` footer).
   *
+  * Per query: one cold run, then `WarmRuns` warm runs back-to-back; the
+  * row's warm figure is the median of those runs. `value` is the cold
+  * total and `warm_total` the sum of the per-query medians. Reads three
+  * environment variables: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS` and
+  * `SPARK_GRAFT_BENCH_OUT` (the per-query artifact's path).
+  *
   * LINE-LENGTH CONTRACT (learned from BENCH_r02..r07): the driver keeps only
   * the last ~2000 chars of output and parses the JSON line out of that tail.
   * r2's 51-query line (~1600 chars) parsed; r3/r4's 72-query lines (~4500
@@ -17,9 +23,12 @@ import org.apache.spark.sql.SparkSession
   * lines; never `require` on the line about to be printed.
   */
 object Bench {
+  /** Warm runs per query; the row's warm figure is their median. */
+  val WarmRuns = 3
+
   /** The ONE stdout summary line the driver parses. Deliberately carries no
     * per-query data: its length is a function of the error COUNT only (and
-    * errors abort the run by default anyway), so it cannot outgrow the
+    * errors abort the run anyway), so it cannot outgrow the
     * driver's ~2000-char stdout tail as the suite scales. Pure, for
     * `BenchLineSpec`. Truncates (never throws) if a pathological error list
     * would overflow — the artifact must always print.
@@ -38,198 +47,56 @@ object Bench {
     s"""{"metric":"total","value":${f3(coldTotal)},"unit":"sec"$warm$errs,"sf":"$sfDir"}"""
   }
 
-  /** Committed-history artifact, reduced to the fields adjudication
-    * needs. `cpus`/`drift` are None when the artifact predates them or
-    * the parse fails — both disable adjudication (fail-open).
+  /** Median of a non-empty sample; an even count averages the two middle
+    * values. Pure, for `BenchLineSpec` and `BenchArtifactSpec`.
     */
-  case class BenchHistory(cpus: Option[Int], drift: Option[Double],
-      outlierRows: Int, norms: Map[String, Double])
-
-  /** Structured parse of a committed BENCH_FULL.json body (VERDICT r13
-    * item 4: the old whole-body regex could fabricate or drop entries
-    * when an error string carried braces or an embedded `"name":{...
-    * "warm_norm":N` fragment). Jackson is already on the classpath
-    * (Spark's own JSON stack); navigation is field-by-field so a
-    * reordered or extended artifact still parses. Total: any failure
-    * returns an empty history, which disables adjudication rather than
-    * failing the run. Pinned by `BenchLineSpec`.
-    */
-  def parseHistory(json: String): BenchHistory =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      val norms = Map.newBuilder[String, Double]
-      var outliers = 0
-      val it = root.path("queries").properties().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val wn = e.getValue.path("warm_norm")
-        if (wn.isNumber) norms += (e.getKey -> wn.asDouble())
-        if (e.getValue.path("hist_outlier").asBoolean(false)) outliers += 1
-      }
-      def num(f: String) = Option(root.path(f)).filter(_.isNumber)
-      BenchHistory(num("cpus").map(_.asInt()),
-        num("calibration_drift").map(_.asDouble()), outliers, norms.result())
-    } catch { case scala.util.control.NonFatal(_) =>
-      BenchHistory(None, None, 0, Map.empty) }
-
-  /** A history artifact is quiet enough to adjudicate against iff its
-    * sweep-wide drift stayed under this (a contaminated row implies a
-    * 2x calibration sample, so drift >= 2 subsumes contamination).
-    */
-  val QuietDrift = 2.0
-
-  /** Config-aware history gate (VERDICT r13 items 1+5): the 3x
-    * `hist_norm` adjudication assumes norms are comparable, which
-    * holds only when (a) the history ran on the SAME core count (a
-    * parallelism-sensitive query's norm shifts with cores while the
-    * single-threaded sentinel's doesn't), (b) the history host was
-    * quiet (drift < 2), and (c) the history itself carries no
-    * unresolved outlier rows (its norms already reflect solo re-run
-    * minima, but an outlier-bearing sweep was noisy by definition).
-    * Left(reason) disables adjudication — fail-open, never fails the
-    * run. Pure, for `BenchLineSpec`/`BenchHistoryGateSpec`.
-    */
-  def historyUsable(h: BenchHistory, runCpus: Int): Either[String, Unit] =
-    if (h.norms.isEmpty) Left("no-norms")
-    else if (!h.cpus.contains(runCpus))
-      Left(s"cpus-mismatch hist=${h.cpus.map(_.toString).getOrElse("?")} run=$runCpus")
-    else if (!h.drift.exists(d => d > 0 && d < QuietDrift))
-      Left(f"noisy-history drift=${h.drift.getOrElse(-1.0)}%.2f")
-    else if (h.outlierRows > 0)
-      Left(s"history-has-outliers n=${h.outlierRows}")
-    else Right(())
-
-  /** History-outlier policy (VERDICT r12 item 1): a sweep row is re-run
-    * once, solo, when its contention-normalized warm (`warm / cal`) reads
-    * more than `HistFactor`x its committed-history `warm_norm` AND its warm
-    * time clears an absolute floor (sub-100ms rows are timer/GC noise, and
-    * a 3x blip on 30ms costs nothing to trust). This closes the gap the
-    * sentinel policy left: a contention burst that starts after a sentinel
-    * sample and ends before the next one inflates the rows between them
-    * with zero `contaminated` flags (r12's d22 read warm_norm 70 vs a
-    * committed ~2, unflagged). Pure, for `BenchLineSpec`.
-    */
-  val HistFactor = 3.0
-  val HistWarmFloorSec = 0.1
-  def isHistOutlier(sweepNorm: Double, warmSec: Double,
-      committedNorm: Option[Double]): Boolean =
-    committedNorm.exists(h => h > 0 && sweepNorm > HistFactor * h) &&
-      warmSec >= HistWarmFloorSec
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Second (warm) pass on by default: cold totals are dominated by
-    // one-shot Janino/JIT codegen (NOTES: 3-6x steady state), so the
-    // warm pass is the throughput number. SPARK_GRAFT_WARM=0 disables.
-    val warmPass = sys.env.getOrElse("SPARK_GRAFT_WARM", "1") != "0"
-    // Committed-history norms, read BEFORE this run overwrites the file:
-    // the adjudication baseline is the last COMMITTED quiet run — always
-    // a repo-cwd artifact by default, even when this run's output is
-    // redirected via SPARK_GRAFT_BENCH_OUT (an A/B run to a temp path
-    // must still adjudicate against the committed history).
-    // Per-core-count preference (r16): the driver sweeps at BOTH 32 and
-    // a lower core count, and whichever runs last overwrites
-    // BENCH_FULL.json — r15's post-round commit carried the 8-core run,
-    // which `historyUsable` rightly refuses at 32 cores, silently
-    // disabling outlier adjudication for the whole next round. A
-    // committed BENCH_FULL_c<cpus>.json therefore wins over the legacy
-    // path when it exists, so each core count adjudicates against its
-    // own quiet baseline. Missing/unreadable history just disables the
-    // outlier policy (first run, renamed query) — never fails the bench.
-    val histPath = sys.env.get("SPARK_GRAFT_BENCH_HISTORY").getOrElse {
-      val perCpus = s"BENCH_FULL_c$cpus.json"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(perCpus)))
-        perCpus
-      else "BENCH_FULL.json"
-    }
-    // NonFatal only (ADVICE r14): the fail-open contract covers parse/IO
-    // failures, not OutOfMemoryError/InterruptedException.
-    val hist: BenchHistory =
-      try parseHistory(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(histPath)), "UTF-8"))
-      catch { case scala.util.control.NonFatal(_) =>
-        BenchHistory(None, None, 0, Map.empty) }
-    // Config-aware gate (VERDICT r13 item 1): adjudicate only against a
-    // quiet history recorded at THIS run's core count — otherwise the
-    // norms aren't comparable and the 3x gate mis-fires or misses.
-    val histUse = historyUsable(hist,
-      scala.util.Try(cpus.toInt).getOrElse(-1))
-    val histNorm: Map[String, Double] =
-      if (histUse.isRight) hist.norms else Map.empty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional comma-separated runtime confs for A/B experiments (the
-    // Profile convention), e.g. SPARK_GRAFT_EXTRA_CONF=
-    // "spark.sql.join.preferSortMergeJoin=false". Never set by the
-    // driver, so the judged run always measures the defaults above.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
     // Layer-3 runtime plan guard, wired for the whole suite: every
     // executed plan of every benched query is swept for cartesian/trap
     // shapes, turning the bench into a runtime plan audit for free. A
     // flag fails the run at the end (after artifacts are persisted).
     val planGuard = new graft.plans.PlanGuardListener()
     spark.listenerManager.register(planGuard)
-    // Contention sentinel (VERDICT r9 item 1): a fixed, data-independent
-    // calibration probe (CPU-bound range-sum + one tiny fixed parquet
-    // scan) interleaved through the sweep. Its samples land in
-    // BENCH_FULL.json (`calibration: [...]`): on a quiet host they are
-    // flat (measured <±15%); a sample drifting 2x+ above the minimum
-    // marks the queries timed near it as contention-suspect — the
-    // signal the r9 official artifact lacked when host contention
-    // inflated w49/d20/s09 by 4-17x. The probe costs ~0.1s per sample
-    // (~10 samples per full sweep), outside every timed span.
-    val calSamples = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    def calibrate(idx: Int): Unit = {
-      // each sample = min of 3 micro-runs: a GC pause inflates at most
-      // one run, while genuine host contention inflates all three — the
-      // min isolates the signal the sentinel exists for
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(2000000L).selectExpr("sum(id * 3 % 7)").collect()
-        try spark.read.parquet(s"$sfDir/nation.parquet").count()
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      calSamples += ((idx, runs.min))
-    }
     // Warm up JVM/codegen/parquet-reader paths so the first timed query
-    // isn't charged for session initialization — including the
-    // calibration probe's own codegen (two untracked runs; the tracked
-    // samples then measure the host, not compilation).
+    // isn't charged for session initialization.
     spark.range(1000).selectExpr("sum(id)").collect()
     try Tables.events(spark, sfDir).limit(1).collect()
     catch { case _: Throwable => () }
-    // 4 untracked sentinel warm-ups (12 micro-runs): the generated code
-    // is codegen-cached after one, but JIT tiering of the hot loop needs
-    // several more before the probe's floor stabilizes — an unwarmed
-    // sample 0 reads ~1.8x the steady floor and fakes a drift signal.
-    (1 to 4).foreach(_ => calibrate(-1)); calSamples.clear()
-    // The warm repeat runs BACK-TO-BACK with the cold run, not as a
-    // second full sweep: Spark's whole-stage-codegen class cache holds
-    // only 100 generated classes, and 72 queries generate far more per
-    // sweep — a sweep-then-sweep "warm" pass (r4) recompiled everything
-    // and measured compile again (s08 "warm" 9.4s vs 1.1s genuinely
-    // warm). Back-to-back, the repeat hits the still-hot cache and is
-    // the steady-state number. Both runs pay their own cache population
+    // The warm repeats run BACK-TO-BACK with the cold run, not as later
+    // full sweeps: Spark's whole-stage-codegen class cache holds only 100
+    // generated classes, and the suite generates far more per sweep — a
+    // sweep-then-sweep "warm" pass (r4) recompiled everything and
+    // measured compile again (s08 "warm" 9.4s vs 1.1s genuinely warm).
+    // Back-to-back, the repeats hit the still-hot cache and are the
+    // steady-state number. Every run pays its own cache population
     // (unpersistAll between).
     // A failing query must be VISIBLE in the artifact: its time is
     // recorded as -1.0 (impossible for a real measurement) and its error
     // lands in the errors map — never elapsed-time-to-crash, which reads
     // as a healthy number (the r6 d17 lesson).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fail(name: String, e: Throwable): Unit =
+      errors(name) = e.getClass.getSimpleName + ": " +
+        String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(300)
     // Per-query EXECUTED-plan flags (synchronous, exactly attributed —
     // the listener above sees the same plans but its callbacks arrive
     // on the async listener bus under an action name, not a query name)
     val runtimeFlags =
       scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+    def addFlags(name: String, fs: Seq[String]): Unit =
+      if (fs.nonEmpty)
+        runtimeFlags(name) = (runtimeFlags.getOrElse(name, Nil) ++ fs).distinct
     // Queries whose timed span paid a write-once Materialized build
     // (ADVICE r10: whichever of p31/p32/w23/w49 runs first pays the
     // shared build inside its cold time while the others scan the
@@ -247,11 +114,7 @@ object Bench {
       // adaptive plan, making the "runtime" gate a second static sweep).
       val exec =
         try { val a = fn(spark, sfDir).groupBy().count(); a.head(); Some(a) }
-        catch { case e: Throwable =>
-          errors(name) = e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(300)
-          None
-        }
+        catch { case e: Throwable => fail(name, e); None }
       val dt = (System.nanoTime() - t0) / 1e9
       if (Materialized.buildCount > builds0) builtDuring += name
       // plan sweep + cache bookkeeping, outside the timed span. Any
@@ -259,22 +122,18 @@ object Bench {
       // merges its plan flags here, so a structural trap inside a
       // Materialized build faces the same gate as one in the query (the
       // static sweep only ever sees the finished table's parquet scan).
+      // A sweep that throws is the query's error: read as "no flags", it
+      // would wave the query past the trap gate.
       exec.foreach { a =>
-        val fs =
-          try graft.PlanAudit.flags(a.queryExecution.executedPlan.toString)
-          catch { case _: Throwable => Nil }
-        val bf = Materialized.drainBuildFlags().values.flatten.toSeq
-        val merged = (runtimeFlags.getOrElse(name, Nil) ++ fs ++ bf).distinct
-        if (merged.nonEmpty) runtimeFlags(name) = merged
+        try addFlags(name,
+          graft.PlanAudit.flags(a.queryExecution.executedPlan.toString))
+        catch { case scala.util.control.NonFatal(e) => fail(name, e) }
+        addFlags(name, Materialized.drainBuildFlags().values.flatten.toSeq)
       }
       Caches.unpersistAll()
-      if (exec.isDefined) dt else -1.0
+      if (exec.isDefined && !errors.contains(name)) dt else -1.0
     }
-    // Subset filter for A/B and contention experiments (never set by the
-    // driver): a regex over full query names, e.g. "(w49|d20|s09).*".
-    val nameFilter = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER", "")
-    val selected = SparkEntry.queries.toSeq.filter { case (n, _) =>
-      nameFilter.isEmpty || n.matches(nameFilter) }
+    val selected = SparkEntry.queries.toSeq
     // Pre-sweep warm of Materialized entries (VERDICT r11 item 1): every
     // query is CONSTRUCTED once before any timed span, so each shared
     // write-once build (pair graph, release manifests, mad stats, ...)
@@ -284,184 +143,63 @@ object Bench {
     // cold outlier was a build's driver fixpoint landing inside one
     // query's cold span). Build-plan flags still face the runtime
     // gate: drained per constructing query, merged into its flag set.
-    // SPARK_GRAFT_PREWARM=0 restores the r11 behavior for A/B runs.
     val prewarmT0 = System.nanoTime()
-    val prewarmSec: Double =
-      if (sys.env.getOrElse("SPARK_GRAFT_PREWARM", "1") == "0") -1.0
-      else {
-        selected.foreach { case (name, fn) =>
-          // construction only — builds and any in-body scalar reads run;
-          // the query's own action does not. A construction error is
-          // printed here (so a silently-skipped build-flag drain is
-          // visible) and re-raised by the timed sweep per query.
-          try { fn(spark, sfDir); () } catch { case e: Throwable =>
-            println(s"# bench-prewarm-construct-error $name " +
-              e.getClass.getSimpleName)
-          }
-          val bf = Materialized.drainBuildFlags().values.flatten.toSeq
-          if (bf.nonEmpty)
-            runtimeFlags(name) =
-              (runtimeFlags.getOrElse(name, Nil) ++ bf).distinct
-          Caches.unpersistAll()
-        }
-        (System.nanoTime() - prewarmT0) / 1e9
+    selected.foreach { case (name, fn) =>
+      // construction only — builds and any in-body scalar reads run;
+      // the query's own action does not. A construction error is
+      // printed here (so a silently-skipped build-flag drain is
+      // visible) and re-raised by the timed sweep per query.
+      try { fn(spark, sfDir); () } catch { case e: Throwable =>
+        println(s"# bench-prewarm-construct-error $name " +
+          e.getClass.getSimpleName)
       }
-    def pass(): Seq[(String, Double, Double)] = {
-      calibrate(0)
-      val out = selected.zipWithIndex.map { case ((name, fn), i) =>
-        val coldT = benchOne(name, fn)
-        val warmT = if (warmPass && coldT >= 0) benchOne(name, fn) else -1.0
-        if ((i + 1) % 25 == 0 && i + 1 < selected.size) calibrate(i + 1)
-        (name, coldT, warmT)
-      }
-      calibrate(selected.size)
-      out
+      addFlags(name, Materialized.drainBuildFlags().values.flatten.toSeq)
+      Caches.unpersistAll()
     }
+    val prewarmSec = (System.nanoTime() - prewarmT0) / 1e9
+    // (name, cold, warm runs); no warm runs after a failed cold run
+    val rows = selected.map { case (name, fn) =>
+      val cold = benchOne(name, fn)
+      (name, cold,
+        if (cold >= 0) Seq.fill(WarmRuns)(benchOne(name, fn)) else Seq.empty)
+    }
+    def warmOf(runs: Seq[Double]): Double =
+      if (runs.nonEmpty && runs.forall(_ >= 0)) median(runs) else -1.0
     // Short key = id prefix before the first '_' ("q01", "d08", ...).
     // Must stay unique or two queries silently merge in the output map.
     def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val shorts = SparkEntry.queries.keys.toSeq.map(shortKey)
+    val shorts = selected.map(q => shortKey(q._1))
     require(shorts.distinct.size == shorts.size,
       s"non-unique bench short keys: ${shorts.diff(shorts.distinct).mkString(",")}")
-    def json(m: Seq[(String, Double)], fmt: Double => String, short: Boolean): String =
-      m.map { case (k, v) =>
-        "\"" + (if (short) shortKey(k) else k) + "\":" + fmt(v)
-      }.mkString("{", ",", "}")
+    def json(m: Seq[(String, Double)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def f3(v: Double): String = f"$v%.3f"
-    val both = pass()
-    // Contamination policy (VERDICT r10 item 5): the sentinel's samples
-    // bound every timed span. floor = the quiet-host minimum; a sample
-    // > 2x floor marks the queries in its neighbouring segments as
-    // contention-suspect, and each suspect query gets exactly ONE
-    // re-run after the sweep (the session is hot, so the re-run is a
-    // warm measurement). BENCH_FULL then carries the raw times, the
-    // re-run, and a `contaminated` marker per suspect row; warm_total
-    // uses min(warm, rerun) per query — a dirty artifact can no longer
-    // read as a regression (r9) or mask one, and a quiet run (every
-    // round so far has drift < 2) is bit-identical to the old format.
-    val calFloor = if (calSamples.nonEmpty) calSamples.map(_._2).min else -1.0
-    val hotIdx =
-      calSamples.filter(_._2 > 2 * calFloor).map(_._1).toSet
-    val contaminated: Set[String] =
-      if (hotIdx.isEmpty || calFloor <= 0) Set.empty
-      else selected.zipWithIndex.collect {
-        case ((n, _), i) if {
-          val lo = calSamples.map(_._1).filter(_ <= i)
-            .maxOption.getOrElse(0)
-          val hi = calSamples.map(_._1).filter(_ > i)
-            .minOption.getOrElse(selected.size)
-          hotIdx.contains(lo) || hotIdx.contains(hi)
-        } => n
-      }.toSet
-    // History adjudication (VERDICT r12 item 1): re-run — once, solo, on
-    // the now-quiet-or-not host but with a fresh timed span — every row
-    // whose sweep warm_norm exceeds HistFactor x its committed-history
-    // warm_norm. The sentinel policy above catches bursts that straddle a
-    // sample; this catches the ones that land entirely between samples
-    // (r12's d22: warm_norm 70, zero contamination flags). min(warm,
-    // rerun) then feeds warm_total and the per-row effective warm, so a
-    // burst row self-heals in the artifact instead of needing judge-side
-    // solo profiling.
-    // Nearest PRECEDING sentinel sample — the one lookup both the
-    // adjudication and the artifact's warm_norm must share (a diverging
-    // convention would make them disagree silently).
-    def calBefore(i: Int): Option[Double] =
-      calSamples.filter(_._1 <= i).lastOption.map(_._2)
-    val histOutliers: Set[String] = both.zipWithIndex.collect {
-      case ((n, _, w), i) if w >= 0 && calBefore(i).filter(_ > 0).exists(
-        s => isHistOutlier(w / s, w, histNorm.get(n))) => n
-    }.toSet
-    val rerun: Map[String, Double] = selected.collect {
-      case (n, fn) if contaminated(n) || histOutliers(n) =>
-        // a FAILED rerun of a query whose sweep measurement succeeded
-        // must not fail the run: the sweep numbers are valid, the
-        // rerun was only an adjudication refinement. Drop the error
-        // benchOne recorded; effWarm already ignores rerun < 0.
-        val sweepOk = !errors.contains(n)
-        val r = benchOne(n, fn)
-        if (sweepOk && r < 0) errors.remove(n)
-        n -> r
-    }.toMap
-    def effWarm(n: String, w: Double): Double =
-      rerun.get(n).filter(r => r >= 0 && w >= 0).map(math.min(w, _))
-        .getOrElse(w)
-    val cold = both.map { case (n, c, _) => n -> c }
+    val cold = rows.map { case (n, c, _) => n -> c }
+    val warm = rows.map { case (n, _, ws) => n -> warmOf(ws) }
     val coldTotal = cold.map(_._2).sum
-    println("# bench-cold-full " + json(cold, _.toString, short = false))
-    val extra = if (warmPass) {
-      val warm = both.map { case (n, _, w) => n -> effWarm(n, w) }
-      val warmTotal = warm.map(_._2).sum
-      println("# bench-warm-full " + json(warm, _.toString, short = false))
-      s""","warm_total":${f3(warmTotal)}"""
-    } else ""
+    val warmTotal = warm.map(_._2).sum
+    println("# bench-cold-full " + json(cold))
+    println("# bench-warm-full " + json(warm))
     // Full-precision per-query artifact on disk: the driver keeps only the
-    // stdout tail, so round-over-round diffs off the "# bench-*-full"
-    // lines get lost — BENCH_FULL.json is the durable record (cold is
-    // compile-dominated and noisy; warm is the steady-state signal).
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+    // stdout tail, so run-over-run diffs off the "# bench-*-full" lines
+    // get lost — BENCH_FULL.json is the durable record. `warm_runs` keeps
+    // the raw repeats behind each median; `built` marks a row that paid
+    // a shared write-once build inside its timed span (ADVICE r10 — with
+    // the prewarm it should never appear; if it does, a build escaped).
     val jstr = (s: String) => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    // Calibration record + drift summary: `i` is the sweep position the
-    // sample was taken at (0 = before the first timed query). drift =
-    // max/min over the sweep; > ~2 means the host was NOT quiet for part
-    // of the run and per-query rows near the slow samples are suspect.
-    val calJson = calSamples.map { case (i, s) =>
-      f"""{"i":$i,"sec":$s%.3f}""" }.mkString("[", ",", "]")
-    val calDrift = if (calSamples.nonEmpty && calSamples.map(_._2).min > 0)
-      calSamples.map(_._2).max / calSamples.map(_._2).min else -1.0
-    val fullJson = both.zipWithIndex.map { case ((n, c, w), i) =>
-      // cal = the nearest PRECEDING sentinel sample (the host state the
-      // row was timed under); warm_norm = effective warm / cal — the
-      // contention-normalized per-query metric (VERDICT r11 item 1: a
-      // noisy-host row reads high on warm but flat on warm_norm, so
-      // round-over-round diffs need no solo re-profiling); built marks
-      // the row that paid a shared write-once build inside its timed
-      // span (ADVICE r10 — with the pre-sweep warm it should never
-      // appear; if it does, a build escaped the prewarm).
-      val calOpt = calBefore(i)
-      val cal = calOpt.map(s => f""","cal":$s%.3f""").getOrElse("")
-      val wEff = effWarm(n, w)
-      val wNorm = calOpt.filter(s => s > 0 && wEff >= 0)
-        .map(s => f""","warm_norm":${wEff / s}%.3f""").getOrElse("")
-      val extras = cal + wNorm +
+    val fullJson = rows.map { case (n, c, ws) =>
+      s"${jstr(n)}:{" + s""""cold":$c,"warm":${warmOf(ws)},""" +
+        s""""warm_runs":${ws.mkString("[", ",", "]")}""" +
         (if (builtDuring(n)) s""","built":true""" else "") +
-        (if (contaminated(n)) s""","contaminated":true""" else "") +
-        (if (histOutliers(n))
-          f""","hist_outlier":true,"hist_norm":${histNorm(n)}%.3f"""
-         else "") +
-        rerun.get(n).map(r => s""","warm_rerun":$r""").getOrElse("")
-      s"${jstr(n)}:{" + s""""cold":$c,"warm":$w""" + extras +
         errors.get(n).map(e => s""","error":${jstr(e)}""").getOrElse("") + "}"
     }.mkString(
       s"""{"sf":${jstr(sfDir)},"cpus":$cpus,"shuffle_partitions":$cpus,""" +
         s""""queries":{""", ",",
-      s"""},"cold_total":${f3(coldTotal)}${extra},""" +
-      (if (prewarmSec >= 0) s""""prewarm_sec":${f3(prewarmSec)},""" else "") +
-      s""""calibration":$calJson,""" +
-      s""""calibration_drift":${f3(calDrift)},""" +
-      // self-declared history eligibility (VERDICT r13 item 5): true
-      // iff this run could serve as the next round's adjudication
-      // baseline — quiet sweep, nothing contaminated, no outlier rows,
-      // zero errors. historyUsable additionally re-derives quietness
-      // from drift/outliers at load time, so the flag is a readable
-      // summary, not the trusted input.
-      s""""history_eligible":${calDrift > 0 && calDrift < QuietDrift &&
-        histOutliers.isEmpty && contaminated.isEmpty && errors.isEmpty},""" +
-      s""""errors":[${errors.keys.map(jstr).mkString(",")}]}\n""")
+      s"""},"cold_total":${f3(coldTotal)},"warm_total":${f3(warmTotal)},""" +
+        s""""prewarm_sec":${f3(prewarmSec)},""" +
+        s""""errors":[${errors.keys.map(jstr).mkString(",")}]}\n""")
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       fullJson.getBytes("UTF-8"))
-    // Per-core-count twin of the artifact (r16, see histPath above):
-    // written only for default-path runs — an A/B run redirected via
-    // SPARK_GRAFT_BENCH_OUT must not clobber the committed per-config
-    // baselines.
-    if (sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"BENCH_FULL_c$cpus.json"),
-        fullJson.getBytes("UTF-8"))
-    // "value" stays the cold total — comparable with every prior round.
-    val line = summaryLine(coldTotal,
-      if (warmPass) Some(both.map { case (n, _, w) => effWarm(n, w) }.sum)
-      else None,
-      errors.keys.toSeq.map(shortKey), sfDir)
     // Runtime plan-guard readout: the synchronous per-query sweep (the
     // gate) and the async listener's aggregate (the wired layer-3 path
     // — it observes every executed plan including warm-up and any
@@ -472,30 +210,22 @@ object Bench {
     println("# bench-planguard " + runtimeFlags.map { case (n, fs) =>
       s"${jstr(n)}:[${fs.map(jstr).mkString(",")}]"
     }.mkString("{", ",", "}") + s" listener_hits=${planGuard.flagged.size}")
-    println(f"# bench-calibration drift=$calDrift%.2f samples=$calJson")
-    println(s"# bench-history path=$histPath " +
-      s"hist_cpus=${hist.cpus.map(_.toString).getOrElse("?")} " +
-      s"hist_drift=${hist.drift.map(d => f"$d%.2f").getOrElse("?")} " +
-      s"run_cpus=$cpus " +
-      s"usable=${histUse.fold(r => s"no($r)", _ => "yes")} " +
-      s"norms=${histNorm.size} outliers=${histOutliers.size} " +
-      s"[${histOutliers.toSeq.sorted.take(20).mkString(",")}]")
-    println(line)
+    // "value" stays the cold total — comparable with every prior round.
+    println(summaryLine(coldTotal, Some(warmTotal),
+      errors.keys.toSeq.map(shortKey), sfDir))
     spark.stop()
     // After the artifact is printed AND persisted: a broken query fails
-    // the run loudly unless explicitly waived — elapsed-time-to-crash
-    // must never ship looking green again.
-    if (sys.env.get("SPARK_GRAFT_ALLOW_ERRORS").isEmpty) {
-      require(errors.isEmpty,
-        s"bench queries failed: ${errors.map { case (k, v) => s"$k ($v)" }.mkString("; ")}")
-      // Structural-trap gate over EXECUTED plans (VERDICT r8 item 2):
-      // a cartesian or BNLJ outside the documented allowlist fails the
-      // bench. multi-SinglePartition is readout-only here — AQE
-      // coalescing makes runtime exchange counts environment-dependent;
-      // the no-AQE CI sweep (PlanAuditSpec) stays its exact gate.
-      val bad = PlanAudit.violations(runtimeFlags.toMap)
-      require(bad.isEmpty, s"executed plans with structural traps " +
-        s"outside PlanAudit.allowlist: $bad")
-    }
+    // the run loudly — elapsed-time-to-crash must never ship looking
+    // green again.
+    require(errors.isEmpty,
+      s"bench queries failed: ${errors.map { case (k, v) => s"$k ($v)" }.mkString("; ")}")
+    // Structural-trap gate over EXECUTED plans (VERDICT r8 item 2):
+    // a cartesian or BNLJ outside the documented allowlist fails the
+    // bench. multi-SinglePartition is readout-only here — AQE
+    // coalescing makes runtime exchange counts environment-dependent;
+    // the no-AQE CI sweep (PlanAuditSpec) stays its exact gate.
+    val bad = PlanAudit.violations(runtimeFlags.toMap)
+    require(bad.isEmpty, s"executed plans with structural traps " +
+      s"outside PlanAudit.allowlist: $bad")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of registered queries
   * (`sbt "runMain graft.Explain q15_revenue_by_nation ..."`) — the
   * feedback loop for pushdown/broadcast/shuffle checks (SURVEY.md §4).
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registered query N times in a warm session and
   * print per-iteration wall times (isolates plan cost from JVM warmup).
   * `sbt "runMain graft.Profile q05_gold_alerts 3"`
@@ -11,13 +9,8 @@ object Profile {
     val name = args(0)
     val n = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Optional comma-separated runtime confs, e.g.
     // SPARK_GRAFT_EXTRA_CONF="spark.sql.codegen.wholeStage=false" —

@@ -1045,12 +1045,7 @@ object ScalingProbe {
     val sparseMode = args.headOption.contains("sparse")
     val substrMode = args.headOption.contains("substr")
     val cdcMode = args.headOption.contains("cdc")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

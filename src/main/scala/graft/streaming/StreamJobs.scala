@@ -353,30 +353,18 @@ object StreamJobs {
       failpoint: (String, Long) => Unit = (_, _) => ()): Unit = {
     import graft.functions.MisraGriesAgg
     import scala.collection.mutable
-    def fsOf(spark: org.apache.spark.sql.SparkSession) =
-      new org.apache.hadoop.fs.Path(accumRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         graft.functions.GraftFunctions.register(spark)
-        val fs = fsOf(spark)
-        def completeVersions(belowExclusive: Long): Seq[Long] = {
-          val p = new org.apache.hadoop.fs.Path(accumRoot)
-          if (!fs.exists(p)) Seq.empty
-          else fs.listStatus(p).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("b") &&
-              fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-            .map(_.getPath.getName.drop(1).toLong)
-            .filter(_ < belowExclusive)
-        }
         val row = batch
           .agg(expr(s"graft_heavy_keys(tok, $capacity)").as("s"))
           .select(col("s.n"), col("s.keys"), col("s.counts")).head()
         val merged = new MisraGriesAgg.MGBuf(row.getLong(0),
           mutable.HashMap(row.getSeq[String](1)
             .zip(row.getSeq[Long](2)): _*))
-        completeVersions(batchId).sorted.lastOption.foreach { v =>
+        val below = VersionedState.versions(spark, accumRoot, batchId)
+        below.lastOption.foreach { v =>
           val prior = spark.read.parquet(s"$accumRoot/b$v").head()
           MisraGriesAgg.mergeInto(merged,
             new MisraGriesAgg.MGBuf(prior.getLong(0),
@@ -393,8 +381,7 @@ object StreamJobs {
         // double-count on replay (the merge reads strictly-below
         // versions, never the orphan this batch just wrote)
         failpoint("version-written", batchId)
-        completeVersions(batchId).foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$accumRoot/b$v"), true))
+        VersionedState.prune(spark, accumRoot, batchId)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -410,13 +397,8 @@ object StreamJobs {
     */
   def heavyTokensSnapshot(
       spark: org.apache.spark.sql.SparkSession, accumRoot: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(accumRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("b") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toLong)
-    spark.read.parquet(s"$accumRoot/b${versions.max}")
+    val newest = VersionedState.versions(spark, accumRoot).max
+    spark.read.parquet(s"$accumRoot/b$newest")
       .select(col("n"), explode(arrays_zip(col("keys"), col("counts"))).as("e"))
       .select(col("e.keys").as("tok"), col("e.counts").as("count_lb"), col("n"))
       .orderBy("tok")

@@ -3,6 +3,7 @@ package graft.velib
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.streaming.VersionedState
 
 /** The full bronze -> silver -> gold -> serving loop as ONE streaming
   * invocation — the Spark-native form of the reference's eager asset
@@ -89,17 +90,6 @@ object Pipeline {
     val statePath = s"$root/state"
     val readingT =
       "STRUCT<ts: TIMESTAMP, seq: BIGINT, bikes: INT, name: STRING>"
-    def fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def completeVersions(belowExclusive: Long): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("b") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.drop(1).toLong)
-        .filter(_ < belowExclusive)
-    }
     val q = SilverJob.parseRaw(spark.readStream.schema("value STRING")
         .text(inputDir)).writeStream
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
@@ -117,7 +107,8 @@ object Pipeline {
             col("last_reported").as("ts"), col("seq"),
             col("bikes_available").as("bikes"),
             col("station_name").as("name"))).as("breadings"))
-        val prior = completeVersions(batchId).sorted.lastOption match {
+        val prior = VersionedState.versions(spark, statePath, batchId)
+          .lastOption match {
           case Some(v) => spark.read.parquet(s"$statePath/b$v")
           case None => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -182,8 +173,7 @@ object Pipeline {
         // prune superseded state versions LAST: the cached `ranked`
         // plan lazily reads the prior version, so deleting it before
         // the gold write could race an uncached recompute
-        completeVersions(batchId).foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$statePath/b$v"), true))
+        VersionedState.prune(spark, statePath, batchId)
         } finally {
           // also on a mid-batch failure: a crashed batch must not leave
           // its input pinned in executor memory for the session's life

@@ -33,79 +33,10 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line == """{"metric":"total","value":1.500,"unit":"sec","sf":"sf"}""")
   }
 
-  test("parseHistory reads config + warm_norm per query from a BENCH_FULL " +
-      "body") {
-    // shape is exactly what Bench.main writes: flat one-level query objects
-    val body =
-      """{"sf":"/root/testdata/sf0.1","cpus":32,"shuffle_partitions":32,""" +
-      """"queries":{""" +
-      """"q01_latest":{"cold":1.2,"warm":0.4,"cal":0.3,"warm_norm":1.333},""" +
-      """"d22_family":{"cold":3.0,"warm":2.0,"cal":0.3,"warm_norm":6.667,""" +
-      """"contaminated":true,"warm_rerun":1.9},""" +
-      """"t01_tokens":{"cold":0.5,"warm":0.1}}""" +  // no cal -> no warm_norm
-      ""","cold_total":4.7,"warm_total":2.5,"calibration_drift":1.51,""" +
-      """"history_eligible":true,"errors":[]}"""
-    val h = Bench.parseHistory(body)
-    assert(h.norms == Map("q01_latest" -> 1.333, "d22_family" -> 6.667))
-    assert(h.cpus == Some(32) && h.drift == Some(1.51) && h.outlierRows == 0)
-  }
-
-  test("parseHistory survives field reordering, brace-laden error strings " +
-      "and embedded warm_norm fragments (the r13 regex failure modes)") {
-    // warm_norm BEFORE cold, an error value that embeds a fake
-    // '"name":{"warm_norm":...' fragment, and trailing config fields —
-    // the exact shapes ADVICE r13 showed could fabricate/drop entries
-    // under the whole-body regex
-    val body =
-      """{"queries":{""" +
-      """"w01_agg":{"warm_norm":2.5,"cold":1.0,"warm":0.8},""" +
-      """"x02_bad":{"cold":-1.0,"warm":-1.0,""" +
-      """"error":"Boom: {\"fake\":{\"warm_norm\":99.9} } brace } soup"},""" +
-      """"y03_out":{"cold":2.0,"warm":1.5,"warm_norm":5.0,""" +
-      """"hist_outlier":true,"hist_norm":1.0,"warm_rerun":0.7}},""" +
-      """"calibration_drift":6.12,"cpus":4,"sf":"/x"}"""
-    val h = Bench.parseHistory(body)
-    assert(h.norms == Map("w01_agg" -> 2.5, "y03_out" -> 5.0),
-      s"fabricated or dropped norms: ${h.norms}")
-    assert(h.cpus == Some(4) && h.drift == Some(6.12) && h.outlierRows == 1)
-  }
-
-  test("parseHistory is total on garbage input") {
-    assert(Bench.parseHistory("") == Bench.BenchHistory(None, None, 0, Map.empty))
-    assert(Bench.parseHistory("not json at all { } [").norms.isEmpty)
-    assert(Bench.parseHistory("""{"queries":[1,2]}""").norms.isEmpty)
-  }
-
-  test("historyUsable: quiet same-config history adjudicates; mismatched " +
-      "cores, noise, outlier rows or an empty parse each disable it") {
-    val quiet32 = Bench.BenchHistory(Some(32), Some(1.51), 0,
-      Map("q01_x" -> 1.0))
-    assert(Bench.historyUsable(quiet32, 32).isRight)
-    assert(Bench.historyUsable(quiet32, 4) ==
-      Left("cpus-mismatch hist=32 run=4"),
-      "a cpus-4 history must never judge a cpus-32 sweep (r13 item 1)")
-    assert(Bench.historyUsable(quiet32.copy(cpus = None), 32).isLeft,
-      "pre-r14 artifact without a recorded config: disabled")
-    assert(Bench.historyUsable(quiet32.copy(drift = Some(6.12)), 32) ==
-      Left("noisy-history drift=6.12"),
-      "the r13 driver sweep (drift 6.12) must not become a baseline")
-    assert(Bench.historyUsable(quiet32.copy(drift = None), 32).isLeft)
-    assert(Bench.historyUsable(quiet32.copy(outlierRows = 5), 32) ==
-      Left("history-has-outliers n=5"))
-    assert(Bench.historyUsable(quiet32.copy(norms = Map.empty), 32) ==
-      Left("no-norms"))
-  }
-
-  test("history outlier policy: 3x committed norm AND the absolute floor") {
-    // committed norm 2.0 -> threshold 6.0
-    assert(Bench.isHistOutlier(sweepNorm = 70.0, warmSec = 9.75,
-      committedNorm = Some(2.0)), "the r12 d22 shape must flag")
-    assert(!Bench.isHistOutlier(5.9, 2.0, Some(2.0)), "below 3x: quiet")
-    assert(!Bench.isHistOutlier(70.0, 0.05, Some(2.0)),
-      "sub-100ms rows are timer noise, never re-run")
-    assert(!Bench.isHistOutlier(70.0, 9.75, None),
-      "no committed history (new query): policy disabled for the row")
-    assert(!Bench.isHistOutlier(70.0, 9.75, Some(-1.0)),
-      "non-positive committed norm: disabled")
+  test("median: middle of an odd sample, mean of the middle pair if even") {
+    assert(Bench.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(Bench.median(Seq(0.5, 9.0, 0.4)) == 0.5, "an outlier run never moves it")
+    assert(Bench.median(Seq(4.0)) == 4.0)
+    assert(Bench.median(Seq(1.0, 4.0, 2.0, 3.0)) == 2.5)
   }
 }

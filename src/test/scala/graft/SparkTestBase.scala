@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one per suite, local threads, UTC, small shuffle. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = LocalSession.builder(4)
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "u")}")
     .getOrCreate()
