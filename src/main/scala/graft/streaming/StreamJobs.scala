@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
   TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.DecimalType
+import KeyedFold.{countInto, firstSeen, foldByKey}
 
 /** Typed rows for the custom-state example. */
 case class UserEvent(user_id: Long, value: Double)
@@ -466,25 +467,43 @@ object StreamJobs {
     * ...state.RocksDBStateStoreProvider). At 100 TB the practical wins
     * over fMGWS are incremental state reads (no full-value
     * deserialization per key visit for list/map state) and disk-backed
-    * state capacity beyond executor heap.
+    * state capacity beyond executor heap. The fold keeps the running
+    * max/count as the key's [[KeyedFold]] state, read once and written
+    * once per key per micro-batch.
     */
   def runningUserMaxTws(events: Dataset[UserEvent]): Dataset[UserMaxState] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningMaxProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(events)(_.user_id)(
+      uid => UserMaxState(uid, Double.NegativeInfinity, 0L), runningMaxStep)
   }
 
-  /** Running per-(user, event_type) counts on transformWithState
-    * MapState — see [[TypeCountProcessor]] for why this beats a map
-    * carried in a flatMapGroupsWithState value at wide per-user state.
+  private def runningMaxStep(uid: Long, prev: UserMaxState,
+      rows: Iterator[UserEvent], unused: Tally[Long])
+      : (UserMaxState, Seq[UserMaxState]) = {
+    var mx = prev.max_value
+    var n = prev.n
+    rows.foreach { r => if (r.value > mx) mx = r.value; n += 1 }
+    val next = UserMaxState(uid, mx, n)
+    (next, Seq(next))
+  }
+
+  /** Running per-(user, event_type) counts in the fold's MapState
+    * tally. The point vs a flatMapGroupsWithState Map[String, Long]
+    * value: only the keys a micro-batch TOUCHES are read and written
+    * (point lookups against the RocksDB store), never the user's whole
+    * map — the difference between O(batch) and O(state) work per key
+    * when per-user state grows wide.
     */
   def runningTypeCountsTws(events: Dataset[TypedEvent]): Dataset[TypeCount] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TypeCountProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(events)(_.user_id)(_ => false, typeCountStep)
   }
+
+  private def typeCountStep(uid: Long, s: Boolean,
+      rows: Iterator[TypedEvent], counts: Tally[String])
+      : (Boolean, Seq[TypeCount]) =
+    (s, countInto(counts, rows.map(_.event_type))
+      .map { case (t, n) => TypeCount(uid, t, n) })
 
   /** Session summaries via transformWithState EVENT-TIME TIMERS: each
     * user's open session extends with every event, and a timer at
@@ -524,38 +543,6 @@ object StreamJobs {
 /** Typed rows for the MapState example. */
 case class TypedEvent(user_id: Long, event_type: String)
 case class TypeCount(user_id: Long, event_type: String, n: Long)
-
-/** StatefulProcessor for [[StreamJobs.runningTypeCountsTws]]: running
-  * per-(user, event_type) counts in a MapState. The point vs a
-  * flatMapGroupsWithState Map[String, Long] value: only the keys a
-  * micro-batch TOUCHES are read and written (point lookups against the
-  * RocksDB store), never the user's whole map — the difference between
-  * O(batch) and O(state) work per key when per-user state grows wide.
-  */
-class TypeCountProcessor
-    extends StatefulProcessor[Long, TypedEvent, TypeCount] {
-  @transient private var counts: MapState[String, Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    counts = getHandle.getMapState[String, Long]("counts",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[TypedEvent],
-      timerValues: TimerValues): Iterator[TypeCount] = {
-    val touched = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    rows.foreach { r =>
-      val cur = touched.getOrElse(r.event_type,
-        if (counts.containsKey(r.event_type)) counts.getValue(r.event_type)
-        else 0L)
-      touched(r.event_type) = cur + 1
-    }
-    touched.foreach { case (t, n) => counts.updateValue(t, n) }
-    touched.iterator.map { case (t, n) => TypeCount(uid, t, n) }
-  }
-}
 
 /** Typed rows for the event-time-timer session example. */
 case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)
@@ -619,9 +606,12 @@ case class RecentValues(user_id: Long, recent: Seq[Double], n_total: Long)
   * last-k buffer per user in a ListState (+ total count in a
   * ValueState). ListState appends are incremental writes — a batch
   * appends its rows without rewriting the existing buffer; only the
-  * k-trim rewrites, and only when the buffer overflows. The
-  * flatMapGroupsWithState equivalent deserializes and reserializes the
-  * whole buffer every time the key appears.
+  * k-trim rewrites, and only when the buffer overflows. Once the buffer
+  * holds k values, every non-empty batch overflows it, so a full
+  * buffer is rewritten on each batch that touches its key — the saving
+  * is for keys still filling theirs. The flatMapGroupsWithState
+  * equivalent deserializes and reserializes the whole buffer every
+  * time the key appears.
   */
 class RecentValuesProcessor(k: Int)
     extends StatefulProcessor[Long, UserEvent, RecentValues] {
@@ -641,7 +631,7 @@ class RecentValuesProcessor(k: Int)
       timerValues: TimerValues): Iterator[RecentValues] = {
     val incoming = rows.map(_.value).toArray
     incoming.foreach(buf.appendValue)
-    val n = Option(total.get()).getOrElse(0L) + incoming.length
+    val n = (if (total.exists()) total.get() else 0L) + incoming.length
     total.update(n)
     val all = buf.get().toArray
     val kept = all.takeRight(k)
@@ -650,33 +640,6 @@ class RecentValuesProcessor(k: Int)
       kept.foreach(buf.appendValue)
     }
     Iterator(RecentValues(uid, kept.reverse.toSeq, n))
-  }
-}
-
-/** StatefulProcessor for [[StreamJobs.runningUserMaxTws]]: running
-  * per-user max/count in a single ValueState — state is read once and
-  * written once per key per micro-batch.
-  */
-class RunningMaxProcessor
-    extends StatefulProcessor[Long, UserEvent, UserMaxState] {
-  @transient private var state: ValueState[UserMaxState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[UserMaxState]("maxState",
-      org.apache.spark.sql.Encoders.product[UserMaxState], TTLConfig.NONE)
-
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[UserEvent],
-      timerValues: TimerValues): Iterator[UserMaxState] = {
-    val prev = Option(state.get())
-      .getOrElse(UserMaxState(uid, Double.NegativeInfinity, 0L))
-    var mx = prev.max_value
-    var n = prev.n
-    rows.foreach { r => if (r.value > mx) mx = r.value; n += 1 }
-    val next = UserMaxState(uid, mx, n)
-    state.update(next)
-    Iterator(next)
   }
 }
 
@@ -691,37 +654,38 @@ case class FunnelProgress(
     t_click_us: Long,
     t_purchase_us: Long)
 
-/** StatefulProcessor for [[FunnelJobs.funnelTws]]: the w26 greedy
-  * ordered-sequence witness (view -> click -> purchase, each stage
-  * STRICTLY after the previous) as O(1) per-user streaming state —
-  * three stage timestamps in one ValueState, folded forward in event
-  * order.
-  *
-  * Ordering contract: rows are sorted by (ts, event_type) WITHIN each
-  * batch before folding, so intra-batch disorder is handled exactly;
-  * across batches the fold assumes per-key event-time progress (the
-  * watermark discipline). A cross-batch regression (a view arriving
-  * LATER than an already-accepted click's eligibility window) would
-  * require retaining every rejected stage-2/3 event to re-derive the
-  * chain — the retention/latency trade every streaming funnel product
-  * declines; the batch operator (RelOps.w26Funnel) is the
-  * reconciliation path, and the spec pins streaming==batch agreement
-  * on in-order histories.
+/** Streaming funnel entrypoint (separate object: [[StreamJobs]] is the
+  * batch-adjacent surface; this is the T6 arbitrary-state family).
   */
-class FunnelProcessor
-    extends StatefulProcessor[Long, FunnelEvent, FunnelProgress] {
-  @transient private var st: ValueState[FunnelProgress] = _
+object FunnelJobs {
+  /** w26's continual-ingest twin: per-user funnel progression as
+    * transformWithState, emitting a row whenever a user's stage state
+    * ADVANCES (Update mode, no-change batches emit nothing). State is
+    * O(users) x 3 longs — no event retention: the w26 greedy
+    * ordered-sequence witness (view -> click -> purchase, each stage
+    * STRICTLY after the previous) as three stage timestamps in the
+    * fold state, folded forward in event order.
+    *
+    * Ordering contract: rows are sorted by (ts, event_type) WITHIN each
+    * batch before folding, so intra-batch disorder is handled exactly;
+    * across batches the fold assumes per-key event-time progress (the
+    * watermark discipline). A cross-batch regression (a view arriving
+    * LATER than an already-accepted click's eligibility window) would
+    * require retaining every rejected stage-2/3 event to re-derive the
+    * chain — the retention/latency trade every streaming funnel product
+    * declines; the batch operator (RelOps.w26Funnel) is the
+    * reconciliation path, and the spec pins streaming==batch agreement
+    * on in-order histories.
+    */
+  def funnelTws(events: Dataset[FunnelEvent]): Dataset[FunnelProgress] = {
+    import events.sparkSession.implicits._
+    foldByKey(events)(_.user_id)(
+      uid => FunnelProgress(uid, 0L, -1L, -1L, -1L), funnelStep)
+  }
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[FunnelProgress]("funnel",
-      org.apache.spark.sql.Encoders.product[FunnelProgress], TTLConfig.NONE)
-
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[FunnelEvent],
-      timerValues: TimerValues): Iterator[FunnelProgress] = {
-    val prev = Option(st.get())
-      .getOrElse(FunnelProgress(uid, 0L, -1L, -1L, -1L))
+  private def funnelStep(uid: Long, prev: FunnelProgress,
+      rows: Iterator[FunnelEvent], unused: Tally[Long])
+      : (FunnelProgress, Seq[FunnelProgress]) = {
     var (tv, tc, tp) = (prev.t_view_us, prev.t_click_us, prev.t_purchase_us)
     // sort per batch: greedy-first over an ordered fold == the batch
     // operator's min-after-previous-stage selection
@@ -735,25 +699,7 @@ class FunnelProcessor
     }
     val stage = if (tv < 0) 0L else if (tc < 0) 1L else if (tp < 0) 2L else 3L
     val next = FunnelProgress(uid, stage, tv, tc, tp)
-    st.update(next)
-    if (next == prev) Iterator.empty else Iterator(next)
-  }
-}
-
-/** Streaming funnel entrypoint (separate object: [[StreamJobs]] is the
-  * batch-adjacent surface; this is the T6 arbitrary-state family).
-  */
-object FunnelJobs {
-  /** w26's continual-ingest twin: per-user funnel progression as
-    * transformWithState, emitting a row whenever a user's stage state
-    * ADVANCES (Update mode, no-change batches emit nothing). State is
-    * O(users) x 3 longs — no event retention.
-    */
-  def funnelTws(events: Dataset[FunnelEvent]): Dataset[FunnelProgress] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor,
-        TimeMode.None(), OutputMode.Update())
+    (next, if (next == prev) Nil else Seq(next))
   }
 }
 
@@ -763,66 +709,53 @@ object FunnelJobs {
 case class ActiveEvent(user_id: Long, epoch_day: Int)
 case class ActiveDelta(user_id: Long, epoch_day: Int, kind: String)
 
-/** StatefulProcessor for [[RollingJobs.rollingActiveTws]]: per-user
-  * MapState over ACTIVE DAYS (the E94 machinery on the w35 shape).
-  * For every day the user was not yet known active it emits one "dau"
-  * delta, plus one "wau" delta for each day of [d, d+6] not already
-  * covered by the user's trailing-7-day windows — so a downstream
-  * count of deltas per day IS the board: the user contributes to
-  * DAU(d) once and to WAU(c) once per covered day c, exactly the
-  * batch operator's DISTINCT (user, day) / covering-explode counts.
-  *
-  * State is O(active days) per user as point-lookup map entries (never
-  * deserialized wholesale — the MapState-vs-fMGWS argument), and the
-  * emitted stream is append-only deltas: the lakehouse-as-accumulator
-  * pattern (E114) — the serving board is a day-keyed count over the
-  * delta table, refreshable incrementally at any cadence.
-  */
-class RollingActiveProcessor
-    extends StatefulProcessor[Long, ActiveEvent, ActiveDelta] {
-  @transient private var days: MapState[Int, Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    days = getHandle.getMapState[Int, Boolean]("days",
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[ActiveEvent],
-      timerValues: TimerValues): Iterator[ActiveDelta] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[ActiveDelta]
-    // dedupe within the batch, ascending so an earlier new day's
-    // coverage is visible to a later one (insertion order invariance:
-    // the union of [d, d+6] windows is order-independent; processing
-    // sorted just makes the per-day check exact against prior state)
-    val newDays = rows.map(_.epoch_day).toSet
-      .filterNot(days.containsKey).toSeq.sorted
-    newDays.foreach { d =>
-      out += ActiveDelta(uid, d, "dau")
-      // a candidate day c is newly covered iff no EXISTING active day
-      // lies in its trailing window [c-6, c] (d itself not yet inserted)
-      (d to d + 6).foreach { c =>
-        val covered = (c - 6 to c).exists(days.containsKey)
-        if (!covered) out += ActiveDelta(uid, c, "wau")
-      }
-      days.updateValue(d, true)
-    }
-    out.iterator
-  }
-}
-
 /** Streaming rolling-active entrypoint (the T6 family, w35's twin). */
 object RollingJobs {
   /** w35's continual-ingest twin: per-user active-day MapState emitting
     * dau/wau coverage deltas — Update mode, already-known days emit
     * nothing, so a quiet micro-batch costs nothing downstream.
+    *
+    * The fold's tally is the seen-set over ACTIVE DAYS (the E94
+    * machinery on the w35 shape). For every day the user was not yet
+    * known active it emits one "dau" delta, plus one "wau" delta for
+    * each day of [d, d+6] not already covered by the user's
+    * trailing-7-day windows — so a downstream count of deltas per day
+    * IS the board: the user contributes to DAU(d) once and to WAU(c)
+    * once per covered day c, exactly the batch operator's DISTINCT
+    * (user, day) / covering-explode counts.
+    *
+    * State is O(active days) per user as point-lookup map entries (never
+    * deserialized wholesale — the MapState-vs-fMGWS argument), and the
+    * emitted stream is append-only deltas: the lakehouse-as-accumulator
+    * pattern (E114) — the serving board is a day-keyed count over the
+    * delta table, refreshable incrementally at any cadence.
     */
   def rollingActiveTws(events: Dataset[ActiveEvent]): Dataset[ActiveDelta] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RollingActiveProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(events)(_.user_id)(_ => false, rollingActiveStep)
+  }
+
+  private def rollingActiveStep(uid: Long, s: Boolean,
+      rows: Iterator[ActiveEvent], days: Tally[Int])
+      : (Boolean, Seq[ActiveDelta]) = {
+    val out = Vector.newBuilder[ActiveDelta]
+    // dedupe within the batch, ascending so an earlier new day's
+    // coverage is visible to a later one (insertion order invariance:
+    // the union of [d, d+6] windows is order-independent; processing
+    // sorted just makes the per-day check exact against prior state)
+    val newDays = rows.map(_.epoch_day).toSet
+      .filter(d => days.get(d) == 0L).toSeq.sorted
+    newDays.foreach { d =>
+      out += ActiveDelta(uid, d, "dau")
+      // a candidate day c is newly covered iff no EXISTING active day
+      // lies in its trailing window [c-6, c] (d itself not yet inserted)
+      (d to d + 6).foreach { c =>
+        val covered = (c - 6 to c).exists(days.get(_) > 0L)
+        if (!covered) out += ActiveDelta(uid, c, "wau")
+      }
+      days.put(d, 1L)
+    }
+    (s, out.result())
   }
 
   /** Fold the accumulated delta table into the w35 board — day spine
@@ -942,57 +875,36 @@ object AttributionJobs {
 case class TokEvent(tok: String)
 case class TokCount(tok: String, n_occurrences: Long)
 
-/** StatefulProcessor for [[HeavyJobs.heavyTokensTws]]: per-token
-  * running occurrence count in a single ValueState, emitting the new
-  * total whenever the token appears in a micro-batch. Emitted counts
-  * are MONOTONE per token, so the accumulated delta table folds with a
-  * plain max() — no batch ids, no latest-row windows (the same trick
-  * that makes the fold order-independent under micro-batch replays:
-  * max of a monotone series is its last value).
-  *
-  * State is one long per distinct token — a point-lookup counter table
-  * (the honest continual-ingest shape: the batch t11's Misra-Gries
-  * pass SELECTS candidates from a bounded sketch because batch can
-  * afford a second exact pass over the corpus; a stream cannot
-  * re-scan history, so its exactness has to live in state). A
-  * production variant bounds state by TTL'ing cold tokens — which
-  * forfeits exactness for tokens that go hot late; this twin keeps the
-  * exact contract so the board is value-identical to batch t11.
-  */
-class HeavyTokensProcessor
-    extends StatefulProcessor[String, TokEvent, TokCount] {
-  @transient private var n: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    n = getHandle.getValueState[Long]("n",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(
-      tok: String,
-      rows: Iterator[TokEvent],
-      timerValues: TimerValues): Iterator[TokCount] = {
-    var add = 0L
-    while (rows.hasNext) { rows.next(); add += 1 }
-    if (add == 0) Iterator.empty
-    else {
-      val total = Option(n.get()).getOrElse(0L) + add
-      n.update(total)
-      Iterator.single(TokCount(tok, total))
-    }
-  }
-}
-
 /** Streaming heavy-hitters entrypoint (t11's continual-ingest twin). */
 object HeavyJobs {
   /** Per-token running counts as an append-only update stream; the
     * accumulated table folds to the exact batch t11 heavy-token report
-    * via [[heavyTokensBoard]].
+    * via [[heavyTokensBoard]]. The fold state is the token's running
+    * occurrence count, emitted whenever the token appears in a
+    * micro-batch. Emitted counts are MONOTONE per token, so the
+    * accumulated delta table folds with a plain max() — no batch ids,
+    * no latest-row windows (the same trick that makes the fold
+    * order-independent under micro-batch replays: max of a monotone
+    * series is its last value).
+    *
+    * State is one long per distinct token — a point-lookup counter table
+    * (the honest continual-ingest shape: the batch t11's Misra-Gries
+    * pass SELECTS candidates from a bounded sketch because batch can
+    * afford a second exact pass over the corpus; a stream cannot
+    * re-scan history, so its exactness has to live in state). A
+    * production variant bounds state by TTL'ing cold tokens — which
+    * forfeits exactness for tokens that go hot late; this twin keeps the
+    * exact contract so the board is value-identical to batch t11.
     */
   def heavyTokensTws(toks: Dataset[TokEvent]): Dataset[TokCount] = {
     import toks.sparkSession.implicits._
-    toks.groupByKey(_.tok)
-      .transformWithState(new HeavyTokensProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(toks)(_.tok)(_ => 0L, heavyTokensStep)
+  }
+
+  private def heavyTokensStep(tok: String, n: Long,
+      rows: Iterator[TokEvent], unused: Tally[Long]): (Long, Seq[TokCount]) = {
+    val total = n + rows.size
+    (total, if (total == n) Nil else Seq(TokCount(tok, total)))
   }
 
   /** Fold the accumulated count table into t11's board: latest (= max,
@@ -1018,49 +930,6 @@ case class LtvDelta(
     cohort_idx: Int, age_months: Long, n_orders: Long, active_delta: Long,
     rev4: Long)
 
-/** StatefulProcessor for [[LtvJobs.cohortLtvTws]]: per-customer
-  * ValueState pinning the cohort month (first order seen) plus a
-  * MapState over ACTIVE MONTHS for the n_active dedup. Each order
-  * emits one (cohort, age) delta carrying exact integer order count
-  * and revenue in 1e-4 units; the first order of a (customer, month)
-  * also carries active_delta = 1 so a downstream SUM is the batch
-  * operator's COUNT(DISTINCT custkey) per cell.
-  *
-  * ORDERING CONTRACT (the w44 caveat): per customer, micro-batches
-  * must arrive in month order — the cohort is pinned by the first
-  * event seen (in-batch rows are processed in ascending month order,
-  * so any split of a month-sorted stream is safe).
-  */
-class CohortLtvProcessor
-    extends StatefulProcessor[Long, OrderEvent, LtvDelta] {
-  @transient private var cohort: ValueState[Int] = _
-  @transient private var months: MapState[Int, Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    cohort = getHandle.getValueState[Int]("cohort",
-      org.apache.spark.sql.Encoders.scalaInt, TTLConfig.NONE)
-    months = getHandle.getMapState[Int, Boolean]("months",
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      custkey: Long,
-      rows: Iterator[OrderEvent],
-      timerValues: TimerValues): Iterator[LtvDelta] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[LtvDelta]
-    rows.toSeq.sortBy(_.month_idx).foreach { r =>
-      if (!cohort.exists()) cohort.update(r.month_idx)
-      val c = cohort.get()
-      val newMonth = !months.containsKey(r.month_idx)
-      if (newMonth) months.updateValue(r.month_idx, true)
-      out += LtvDelta(c, (r.month_idx - c).toLong, 1L,
-        if (newMonth) 1L else 0L, r.price4)
-    }
-    out.iterator
-  }
-}
-
 /** Streaming cohort-LTV entrypoint (w48's continual-ingest twin). */
 object LtvJobs {
   /** Orders table -> the typed event stream shape (month index =
@@ -1077,13 +946,40 @@ object LtvJobs {
 
   /** Per-order (cohort, age) deltas as an append-only update stream;
     * the accumulated table folds to the exact batch w48 triangle via
-    * [[cohortLtvBoard]].
+    * [[cohortLtvBoard]]. Per customer the fold state pins the cohort
+    * month (first order seen) and the tally is the seen-set over
+    * ACTIVE MONTHS for the n_active dedup. Each order emits one
+    * (cohort, age) delta carrying exact integer order count and revenue
+    * in 1e-4 units; the first order of a (customer, month) also carries
+    * active_delta = 1 so a downstream SUM is the batch operator's
+    * COUNT(DISTINCT custkey) per cell.
+    *
+    * ORDERING CONTRACT (the w44 caveat): per customer, micro-batches
+    * must arrive in month order — the cohort is pinned by the first
+    * event seen (in-batch rows are processed in ascending month order,
+    * so any split of a month-sorted stream is safe).
     */
   def cohortLtvTws(orders: Dataset[OrderEvent]): Dataset[LtvDelta] = {
     import orders.sparkSession.implicits._
-    orders.groupByKey(_.o_custkey)
-      .transformWithState(new CohortLtvProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(orders)(_.o_custkey)(_ => NoCohort, cohortLtvStep)
+  }
+
+  /** "No order seen yet": the cohort is an Int month widened to Long,
+    * so this value can never be a real cohort.
+    */
+  private val NoCohort = Long.MinValue
+
+  private def cohortLtvStep(custkey: Long, cohort: Long,
+      rows: Iterator[OrderEvent], months: Tally[Int])
+      : (Long, Seq[LtvDelta]) = {
+    var c = cohort
+    val out = rows.toVector.sortBy(_.month_idx).map { r =>
+      if (c == NoCohort) c = r.month_idx.toLong
+      val newMonth = firstSeen(months, r.month_idx)
+      LtvDelta(c.toInt, r.month_idx - c, 1L, if (newMonth) 1L else 0L,
+        r.price4)
+    }
+    (c, out)
   }
 
   /** Fold accumulated deltas into w48's board: cells by plain SUMs
@@ -1136,53 +1032,6 @@ case class GramHit(doc_id: Long, gram: String, bench_id: Long)
 case class ContamUpdate(
     doc_id: Long, n_shared_ngrams: Long, first_bench_id: Long)
 
-/** StatefulProcessor for [[DecontamJobs.decontamTws]]: per incoming doc,
-  * a MapState over the bench 4-grams ALREADY COUNTED (a gram matching
-  * several bench docs, or re-arriving in a later micro-batch, must not
-  * inflate the distinct count) plus running (n_shared, min bench_id).
-  * Emits one update per micro-batch that changed the doc's tallies, so
-  * a downstream max/min fold is the exact batch d08 row.
-  */
-class DecontamProcessor
-    extends StatefulProcessor[Long, GramHit, ContamUpdate] {
-  @transient private var seen: MapState[String, Boolean] = _
-  @transient private var nGrams: ValueState[Long] = _
-  @transient private var minBench: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    seen = getHandle.getMapState[String, Boolean]("seen",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-    nGrams = getHandle.getValueState[Long]("n_grams",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    minBench = getHandle.getValueState[Long]("min_bench",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      docId: Long,
-      rows: Iterator[GramHit],
-      timerValues: TimerValues): Iterator[ContamUpdate] = {
-    val oldMb = if (minBench.exists()) minBench.get() else Long.MaxValue
-    var mb = oldMb
-    var newGrams = 0L
-    rows.foreach { r =>
-      if (!seen.containsKey(r.gram)) {
-        seen.updateValue(r.gram, true)
-        newGrams += 1
-      }
-      if (r.bench_id < mb) mb = r.bench_id
-    }
-    if (newGrams == 0 && mb == oldMb) Iterator.empty
-    else {
-      val tot = Option(nGrams.get()).getOrElse(0L) + newGrams
-      nGrams.update(tot)
-      minBench.update(mb)
-      Iterator.single(ContamUpdate(docId, tot, mb))
-    }
-  }
-}
-
 /** Streaming decontamination entrypoint (d08's continual-ingest twin —
   * the contamination check moved to WHERE DOCS ARRIVE, so a poisoned
   * crawl batch is flagged before it lands in the corpus).
@@ -1212,17 +1061,33 @@ object DecontamJobs {
     * accumulates distinct matched grams and the min bench id across
     * micro-batches. [[decontamBoard]] folds the update stream to the
     * exact batch d08 report (the spec pins value identity).
+    *
+    * Per incoming doc the tally is the seen-set over the bench 4-grams
+    * ALREADY COUNTED (a gram matching several bench docs, or
+    * re-arriving in a later micro-batch, must not inflate the distinct
+    * count) and the fold state the running (n_shared, min bench_id).
+    * A micro-batch that changed the doc's tallies emits one update, so
+    * a downstream max/min fold is the exact batch d08 row.
     */
   def decontamTws(docs: DataFrame, bench: DataFrame): Dataset[ContamUpdate] = {
     import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val hits = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), explode(expr(grams)).as("gram"))
       .join(broadcast(bench), Seq("gram"))
       .select(col("doc_id"), col("gram"), col("bench_id"))
       .as[GramHit]
-      .groupByKey(_.doc_id)
-      .transformWithState(new DecontamProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(hits)(_.doc_id)(_ => (0L, Long.MaxValue), decontamStep)
+  }
+
+  private def decontamStep(docId: Long, prev: (Long, Long),
+      rows: Iterator[GramHit], seen: Tally[String])
+      : ((Long, Long), Seq[ContamUpdate]) = {
+    var (n, mb) = prev
+    rows.foreach { r =>
+      if (firstSeen(seen, r.gram)) n += 1
+      if (r.bench_id < mb) mb = r.bench_id
+    }
+    ((n, mb), if ((n, mb) == prev) Nil else Seq(ContamUpdate(docId, n, mb)))
   }
 
   /** Fold the accumulated update table to d08's report: latest (= max,
@@ -1247,54 +1112,6 @@ case class PrivacyUpdate(
     // and silently undercount the board (r13 code review).
     user_id: java.lang.Long,
     n_events: Long)
-
-/** StatefulProcessor for [[PrivacyJobs.privacyTws]]: keyed by the
-  * quasi-identifier tuple, a MapState of users ALREADY SEEN (each user
-  * must enter a group's anonymity count exactly once no matter how many
-  * events they produce) plus the running event count. Emits one row per
-  * NEW user (carrying the post-batch event total) or a single
-  * count-only row when a batch adds events but no users, so the update
-  * stream stays O(new users + touched groups) per micro-batch.
-  */
-class KAnonymityProcessor
-    extends StatefulProcessor[(String, Long, Long), PrivEvent,
-      PrivacyUpdate] {
-  @transient private var users: MapState[Long, Boolean] = _
-  @transient private var nEvents: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    users = getHandle.getMapState[Long, Boolean]("users",
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-    nEvents = getHandle.getValueState[Long]("n_events",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: (String, Long, Long),
-      rows: Iterator[PrivEvent],
-      timerValues: TimerValues): Iterator[PrivacyUpdate] = {
-    var added = List.empty[Long]
-    var cnt = 0L
-    rows.foreach { r =>
-      cnt += 1
-      if (!users.containsKey(r.user_id)) {
-        users.updateValue(r.user_id, true)
-        added ::= r.user_id
-      }
-    }
-    if (cnt == 0) Iterator.empty
-    else {
-      val tot = (if (nEvents.exists()) nEvents.get() else 0L) + cnt
-      nEvents.update(tot)
-      val (et, hr, vb) = key
-      if (added.isEmpty)
-        Iterator.single(PrivacyUpdate(et, hr, vb, null, tot))
-      else added.reverseIterator
-        .map(u => PrivacyUpdate(et, hr, vb, Long.box(u), tot))
-    }
-  }
-}
 
 /** Streaming k-anonymity entrypoint (w51's continual-ingest twin — the
   * privacy audit moved to WHERE EVENTS ARRIVE, so a release pipeline
@@ -1322,14 +1139,36 @@ object PrivacyJobs {
 
   /** Stream of per-group privacy updates: project each event to its
     * QI tuple (w51's (event_type, hour, value decade)) and fold per
-    * group with [[KAnonymityProcessor]].
+    * group. The tally is the seen-set of users (each user must enter a
+    * group's anonymity count exactly once no matter how many events
+    * they produce) and the fold state the running event count. A batch
+    * emits one row per NEW user (carrying the post-batch event total)
+    * or a single count-only row when it adds events but no users, so
+    * the update stream stays O(new users + touched groups) per
+    * micro-batch.
     */
   def privacyTws(events: DataFrame): Dataset[PrivacyUpdate] = {
     import events.sparkSession.implicits._
-    qiEvents(events)
-      .groupByKey(e => (e.event_type, e.hr, e.vb))
-      .transformWithState(new KAnonymityProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(qiEvents(events))(e => (e.event_type, e.hr, e.vb))(
+      _ => 0L, kAnonymityStep)
+  }
+
+  private def kAnonymityStep(key: (String, Long, Long), nEvents: Long,
+      rows: Iterator[PrivEvent], users: Tally[Long])
+      : (Long, Seq[PrivacyUpdate]) = {
+    val (et, hr, vb) = key
+    val added = Vector.newBuilder[Long]
+    var cnt = 0L
+    rows.foreach { r =>
+      cnt += 1
+      if (firstSeen(users, r.user_id)) added += r.user_id
+    }
+    val tot = nEvents + cnt
+    val newUsers = added.result()
+    (tot,
+      if (cnt == 0) Nil
+      else if (newUsers.isEmpty) Seq(PrivacyUpdate(et, hr, vb, null, tot))
+      else newUsers.map(u => PrivacyUpdate(et, hr, vb, Long.box(u), tot)))
   }
 
   /** Fold the accumulated update table to w51's exact report: distinct
@@ -1428,18 +1267,23 @@ object PrivacyJobs {
   /** Stream of per-(QI group, sensitive value) count updates (w53's
     * continual-ingest twin — E254, completing the privacy trilogy's
     * twins next to E249/E252): project each event to w53's QI tuple
-    * and fold per group with [[TClosenessProcessor]]. t-closeness is a
-    * DISTRIBUTIONAL audit, so the state is the per-type running count,
-    * not a seen-set — each update row carries the group's new total
-    * for its type and the board folds them back with a monotone max.
+    * and fold per group. t-closeness is a DISTRIBUTIONAL audit, so the
+    * tally is the per-type running count, not a seen-set — each update
+    * row carries the group's new total for its type and the board
+    * folds them back with a monotone max. A group emits O(touched
+    * values) rows per batch.
     */
   def tClosenessTws(events: DataFrame): Dataset[TCloseUpdate] = {
     import events.sparkSession.implicits._
-    qiEvents(events)
-      .groupByKey(e => (e.hr, e.vb))
-      .transformWithState(new TClosenessProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(qiEvents(events))(e => (e.hr, e.vb))(_ => false,
+      tClosenessStep)
   }
+
+  private def tClosenessStep(key: (Long, Long), s: Boolean,
+      rows: Iterator[PrivEvent], counts: Tally[String])
+      : (Boolean, Seq[TCloseUpdate]) =
+    (s, countInto(counts, rows.map(_.event_type))
+      .map { case (tpe, n) => TCloseUpdate(key._1, key._2, tpe, n) })
 
   /** Fold the accumulated update table to w53's exact report: the
     * latest count per (group, type) is the monotone max over updates,
@@ -1458,41 +1302,6 @@ object PrivacyJobs {
   * post-batch running count for that value.
   */
 case class TCloseUpdate(hr: Long, vb: Long, event_type: String, n_gt: Long)
-
-/** StatefulProcessor for [[PrivacyJobs.tClosenessTws]]: keyed by the QI
-  * tuple (hr, vb), a MapState of per-sensitive-value running counts.
-  * Emits O(touched values) rows per group per batch.
-  */
-class TClosenessProcessor
-    extends StatefulProcessor[(Long, Long), PrivEvent, TCloseUpdate] {
-  @transient private var counts: MapState[String, Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    counts = getHandle.getMapState[String, Long]("counts",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: (Long, Long),
-      rows: Iterator[PrivEvent],
-      timerValues: TimerValues): Iterator[TCloseUpdate] = {
-    val batch = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    rows.foreach { r =>
-      batch.update(r.event_type, batch.getOrElse(r.event_type, 0L) + 1L)
-    }
-    val (hr, vb) = key
-    // materialized eagerly: the state writes must not hide inside a
-    // lazy iterator the runtime might only partially drain
-    val out = batch.map { case (tpe, add) =>
-      val tot = (if (counts.containsKey(tpe)) counts.getValue(tpe)
-        else 0L) + add
-      counts.updateValue(tpe, tot)
-      TCloseUpdate(hr, vb, tpe, tot)
-    }.toList
-    out.iterator
-  }
-}
 
 /** Update rows for the streaming l-diversity twin (w52 — E252):
   * event_type is null except on rows introducing a NEW sensitive value
@@ -1531,18 +1340,19 @@ class LDiversityProcessor
       key: (Long, Long),
       rows: Iterator[PrivEvent],
       timerValues: TimerValues): Iterator[LDivUpdate] = {
-    var newSens = List.empty[String]
-    var newUsers = List.empty[Long]
+    // indexed builders: the zip below reads s(i)/u(i) per output row
+    val newSens = Vector.newBuilder[String]
+    val newUsers = Vector.newBuilder[Long]
     var cnt = 0L
     rows.foreach { r =>
       cnt += 1
       if (!sens.containsKey(r.event_type)) {
         sens.updateValue(r.event_type, true)
-        newSens ::= r.event_type
+        newSens += r.event_type
       }
       if (!users.containsKey(r.user_id)) {
         users.updateValue(r.user_id, true)
-        newUsers ::= r.user_id
+        newUsers += r.user_id
       }
     }
     if (cnt == 0) Iterator.empty
@@ -1550,8 +1360,8 @@ class LDiversityProcessor
       val tot = (if (nEvents.exists()) nEvents.get() else 0L) + cnt
       nEvents.update(tot)
       val (hr, vb) = key
-      val s = newSens.reverse
-      val u = newUsers.reverse
+      val s = newSens.result()
+      val u = newUsers.result()
       val n = math.max(math.max(s.size, u.size), 1)
       (0 until n).iterator.map(i => LDivUpdate(hr, vb,
         if (i < s.size) s(i) else null,
@@ -1595,13 +1405,18 @@ object FdJobs {
     */
   def fdTws(events: DataFrame): Dataset[FdUpdate] = {
     import events.sparkSession.implicits._
-    events.select(col("user_id").cast("string").as("det"),
+    val pairs = events.select(col("user_id").cast("string").as("det"),
         col("event_type").cast("string").as("dep"))
       .filter(col("det").isNotNull && col("dep").isNotNull)
       .as[FdEvent]
-      .groupByKey(_.det)
-      .transformWithState(new FdProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(pairs)(_.det)(_ => 0L, fdStep)
+  }
+
+  /** Emits only when the distinct-dependent count grows. */
+  private def fdStep(det: String, nDep: Long, rows: Iterator[FdEvent],
+      seen: Tally[String]): (Long, Seq[FdUpdate]) = {
+    val n = nDep + rows.count(r => firstSeen(seen, r.dep))
+    (n, if (n == nDep) Nil else Seq(FdUpdate(det, n)))
   }
 
   /** Fold the accumulated update table to p37's exact row for the
@@ -1623,41 +1438,6 @@ object FdJobs {
 case class FdEvent(det: String, dep: String)
 case class FdUpdate(det: String, n_dep: Long)
 
-/** StatefulProcessor for [[FdJobs.fdTws]]: keyed by the determinant
-  * value; emits only when the distinct-dependent count grows.
-  */
-class FdProcessor extends StatefulProcessor[String, FdEvent, FdUpdate] {
-  @transient private var seen: MapState[String, Boolean] = _
-  @transient private var nDep: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    seen = getHandle.getMapState[String, Boolean]("seen",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-    nDep = getHandle.getValueState[Long]("n_dep",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[FdEvent],
-      timerValues: TimerValues): Iterator[FdUpdate] = {
-    var added = 0L
-    rows.foreach { r =>
-      if (!seen.containsKey(r.dep)) {
-        seen.updateValue(r.dep, true)
-        added += 1
-      }
-    }
-    if (added == 0) Iterator.empty
-    else {
-      val n = (if (nDep.exists()) nDep.get() else 0L) + added
-      nDep.update(n)
-      Iterator.single(FdUpdate(key, n))
-    }
-  }
-}
-
 /** Streaming inclusion-dependency drift (E258) — p38's
   * continual-ingest twin for its events registry entry
   * (events.user_id ⊆ customer.c_custkey): the LATE-ARRIVING-DIMENSION
@@ -1665,8 +1445,8 @@ class FdProcessor extends StatefulProcessor[String, FdEvent, FdUpdate] {
   * here as live orphan keys, and un-orphans as the dimension catches
   * up — batch p38 only ever sees the final snapshot. Input is one
   * tagged stream (side ∈ {fk, pk}, value) — in production the fact and
-  * dimension ingest topics union into it. Keyed by the VALUE; state =
-  * the fk row count (ValueState) + the pk-membership flag (ValueState).
+  * dimension ingest topics union into it. Keyed by the VALUE; the fold
+  * state = the fk row count + the pk-membership flag (two longs).
   * Both are MONOTONE (a count only grows; membership flips 0→1 once),
   * so the accumulated update table folds with plain maxes — the
   * E254/E256 shape. A batch emits one row per value whose count grew
@@ -1691,13 +1471,22 @@ object IndJobs {
     */
   def indTws(tagged: DataFrame): Dataset[IndUpdate] = {
     import tagged.sparkSession.implicits._
-    tagged.select(col("side").cast("string").as("side"),
+    val sides = tagged.select(col("side").cast("string").as("side"),
         col("v").cast("string").as("v"))
       .filter(col("v").isNotNull)
       .as[IndEvent]
-      .groupByKey(_.v)
-      .transformWithState(new IndProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(sides)(_.v)(_ => (0L, 0L), indStep)
+  }
+
+  /** Folds (fk row count, pk membership); emits only when the count
+    * grows or membership flips, and never before the value has fk rows.
+    */
+  private def indStep(v: String, prev: (Long, Long), rows: Iterator[IndEvent],
+      unused: Tally[Long]): ((Long, Long), Seq[IndUpdate]) = {
+    var (n, inPk) = prev
+    rows.foreach { r => if (r.side == "fk") n += 1 else inPk = 1L }
+    ((n, inPk),
+      if ((n, inPk) == prev || n == 0L) Nil else Seq(IndUpdate(v, n, inPk)))
   }
 
   /** Fold the accumulated update table to p38's exact row for the
@@ -1723,42 +1512,6 @@ object IndJobs {
 /** Input/update rows for the streaming IND twin (E258). */
 case class IndEvent(side: String, v: String)
 case class IndUpdate(v: String, n_rows: Long, in_pk: Long)
-
-/** StatefulProcessor for [[IndJobs.indTws]]: keyed by the key value;
-  * emits only when the fk row count grows or pk membership flips, and
-  * never before the value has fk rows.
-  */
-class IndProcessor extends StatefulProcessor[String, IndEvent, IndUpdate] {
-  @transient private var nRows: ValueState[Long] = _
-  @transient private var inPk: ValueState[Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    nRows = getHandle.getValueState[Long]("n_rows",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    inPk = getHandle.getValueState[Boolean]("in_pk",
-      org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[IndEvent],
-      timerValues: TimerValues): Iterator[IndUpdate] = {
-    var fkAdded = 0L
-    var sawPk = false
-    rows.foreach { r =>
-      if (r.side == "fk") fkAdded += 1 else sawPk = true
-    }
-    val hadPk = inPk.exists() && inPk.get()
-    val oldN = if (nRows.exists()) nRows.get() else 0L
-    val newPk = hadPk || sawPk
-    val newN = oldN + fkAdded
-    if (newPk && !hadPk) inPk.update(true)
-    if (fkAdded > 0) nRows.update(newN)
-    if (newN > 0 && (fkAdded > 0 || (newPk && !hadPk)))
-      Iterator.single(IndUpdate(key, newN, if (newPk) 1L else 0L))
-    else Iterator.empty
-  }
-}
 
 /** Streaming event-time disorder (E260) — w54's continual-ingest
   * twin: the watermark-delay calibrator run WHERE the stream arrives,
@@ -1790,13 +1543,37 @@ object DisorderJobs {
     */
   def disorderTws(rows: DataFrame): Dataset[DisorderUpdate] = {
     import rows.sparkSession.implicits._
-    rows.select(col("stream").cast("string").as("stream"),
+    val events = rows.select(col("stream").cast("string").as("stream"),
         col("seq").cast("long").as("seq"),
         col("tus").cast("long").as("tus"))
       .as[DisorderEvent]
-      .groupByKey(_.stream)
-      .transformWithState(new DisorderProcessor,
-        TimeMode.None(), OutputMode.Update())
+    foldByKey(events)(_.stream)(
+      s => (DisorderUpdate(s, 0L, 0L, 0L), Long.MinValue), disorderStep)
+  }
+
+  /** Folds each micro-batch's rows in seq order against the carried
+    * (totals, running max event time).
+    *
+    * Buffering bound (ADVICE r14): the in-batch seq sort materializes the
+    * whole per-stream micro-batch in executor memory (`rows.toSeq`) —
+    * UPDATE volume is bounded (one row per stream per batch), but INPUT
+    * buffering is not. A hot stream must cap micro-batch size at the
+    * source (`maxOffsetsPerTrigger` / `maxFilesPerTrigger`) in any
+    * deployment of this job; the state store itself is never the problem
+    * (four longs per stream).
+    */
+  private def disorderStep(stream: String, prev: (DisorderUpdate, Long),
+      rows: Iterator[DisorderEvent], unused: Tally[Long])
+      : ((DisorderUpdate, Long), Seq[DisorderUpdate]) = {
+    var (t, m) = prev
+    rows.toSeq.sortBy(_.seq).foreach { r =>
+      val late = m > r.tus
+      t = DisorderUpdate(stream, t.n_events + 1,
+        t.n_late + (if (late) 1L else 0L),
+        if (late) math.max(t.max_late_us, m - r.tus) else t.max_late_us)
+      if (r.tus > m) m = r.tus
+    }
+    ((t, m), if (t == prev._1) Nil else Seq(t))
   }
 
   /** Fold the accumulated update table to w54's exact row shape:
@@ -1819,51 +1596,3 @@ object DisorderJobs {
 case class DisorderEvent(stream: String, seq: Long, tus: Long)
 case class DisorderUpdate(stream: String, n_events: Long, n_late: Long,
     max_late_us: Long)
-
-/** StatefulProcessor for [[DisorderJobs.disorderTws]]: folds each
-  * micro-batch's rows in seq order against the carried running max.
-  *
-  * Buffering bound (ADVICE r14): the in-batch seq sort materializes the
-  * whole per-stream micro-batch in executor memory (`rows.toSeq`) —
-  * UPDATE volume is bounded (one row per stream per batch), but INPUT
-  * buffering is not. A hot stream must cap micro-batch size at the
-  * source (`maxOffsetsPerTrigger` / `maxFilesPerTrigger`) in any
-  * deployment of this job; the state store itself is never the problem
-  * (four longs per stream).
-  */
-class DisorderProcessor
-    extends StatefulProcessor[String, DisorderEvent, DisorderUpdate] {
-  @transient private var st: ValueState[DisorderUpdate] = _
-  @transient private var runMax: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    st = getHandle.getValueState[DisorderUpdate]("totals",
-      org.apache.spark.sql.Encoders.product[DisorderUpdate],
-      TTLConfig.NONE)
-    runMax = getHandle.getValueState[Long]("run_max",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[DisorderEvent],
-      timerValues: TimerValues): Iterator[DisorderUpdate] = {
-    val batch = rows.toSeq.sortBy(_.seq)
-    if (batch.isEmpty) Iterator.empty
-    else {
-      var t = if (st.exists()) st.get()
-        else DisorderUpdate(key, 0L, 0L, 0L)
-      var m = if (runMax.exists()) runMax.get() else Long.MinValue
-      batch.foreach { r =>
-        val late = m > r.tus
-        t = DisorderUpdate(key, t.n_events + 1,
-          t.n_late + (if (late) 1L else 0L),
-          if (late) math.max(t.max_late_us, m - r.tus) else t.max_late_us)
-        if (r.tus > m) m = r.tus
-      }
-      st.update(t)
-      runMax.update(m)
-      Iterator.single(t)
-    }
-  }
-}

@@ -312,6 +312,28 @@ class PrivacyTwsSpec extends SparkTestBase {
     } }
   }
 
+  test("privacyTws: RocksDB state survives a checkpointed restart — " +
+      "no user re-enters a group and the board equals batch w51") {
+    withRocksDb { withTempDir { tmp =>
+      val updates = drainTwice(tmp, PrivacyJobs.privacyTws)
+      // a reset seen-user tally would re-emit every straddling user
+      // in the second query instance
+      assert(updates.filter(col("user_id").isNotNull)
+        .groupBy("event_type", "hr", "vb", "user_id").count()
+        .filter(col("count") > 1).count() == 0L,
+        "a user entered a group's update stream twice across the restart")
+      val board = PrivacyJobs.privacyBoard(updates).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSeq
+      val batch = graft.ops.RelOps.w51KAnonymity(spark, sf0001).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSeq
+      assert(board == batch,
+        s"post-restart board != batch w51 (${board.size} vs ${batch.size})")
+      assert(batch.nonEmpty)
+    } }
+  }
+
   test("lDiversityTws: RocksDB state survives a checkpointed restart — " +
       "a fresh query resumes the sets and the board equals batch w52") {
     withRocksDb { withTempDir { tmp =>

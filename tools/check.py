@@ -5,9 +5,13 @@ sf tables, sort columns by name, and compare row-by-row.
 
 Usage: python3 tools/check.py <sfDir> <outDir>
 """
+import atexit
 import json
 import math
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 
@@ -25,8 +29,21 @@ def canon(v):
     return repr(v)
 
 
+def oracle_connection():
+    """In-memory DuckDB that spills to a scratch directory under /tmp
+    instead of failing: without a temp_directory an in-memory database
+    cannot spill, so a large oracle (p33_release_diff at sf0.01 on a
+    16 GB host) dies with "Out of Memory Error". The memory limit is
+    half of host memory, leaving the rest to the OS and other work."""
+    spill = tempfile.mkdtemp(prefix="duckdb_oracle_spill_", dir="/tmp")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    host_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return duckdb.connect(config={"memory_limit": f"{host_mib // 2}MiB",
+                                  "temp_directory": spill})
+
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = oracle_connection()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -10,8 +10,9 @@ Usage: python3 tools/pandas_check.py <sfDir> <outDir>
 import json
 import sys
 
-import duckdb
 import pandas as pd
+
+from check import oracle_connection
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -56,7 +57,7 @@ def published_type_violations(con, query):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = oracle_connection()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
