@@ -1,8 +1,7 @@
 package graft
 
 /** Deterministic planted-cluster vector corpus + exact quantized-cosine
-  * ground truth — shared by the ANN recall specs (s07/s08) and
-  * `ScalingProbe`. Geometry: k centroids ~ N(0,1)^dim, members =
+  * ground truth — shared by the ANN recall specs (s07/s08). Geometry: k centroids ~ N(0,1)^dim, members =
   * centroid + noise*N(0,1), seeded so every consumer sees the same
   * corpus. Ground truth uses the SAME round(x*1e6) integer quantization
   * as the engine kernels, so recall is measured against exactly what

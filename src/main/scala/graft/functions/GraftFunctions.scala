@@ -173,7 +173,7 @@ object GraftHash {
     * higher-order formulation — but ONE JVM loop per pair instead of 8
     * interpreted lambda evaluations (ArrayAggregate is CodegenFallback;
     * at 5M (vector, codeword) pairs the interpreted form dominated the
-    * ScalingProbe runtime).
+    * PQ-ADC probe runtime, NOTES.md "ANN scaling measurement").
     */
   def pqDists(a: ArrayData, b: ArrayData): ArrayData = {
     // registered as a general SQL function: validate the hard-coded

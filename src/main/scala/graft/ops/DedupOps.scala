@@ -739,8 +739,9 @@ object DedupOps {
     * hint so Spark can fall back to a shuffled hash join on gram (the
     * hint overrides size estimates and would OOM instead of degrade).
     */
-  /** The d08 core over any (doc_id, text) frame — exposed so the
-    * ScalingProbe can feed synthetic corpora at 10x scale.
+  /** The d08 core over any (doc_id, text) frame — `ScalingProbe
+    * longdocs` feeds it 500-token documents; its 10x-corpus row is
+    * NOTES.md "Dedup scaling".
     */
   private[graft] def decontaminate(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
@@ -1161,7 +1162,9 @@ object DedupOps {
   private[graft] def gramSets(spark: SparkSession, dir: String): DataFrame =
     gramSetsOf(Tables.documents(spark, dir))
 
-  /** gramSets over any (doc_id, text) frame — shared with ScalingProbe. */
+  /** gramSets over any (doc_id, text) frame (its 10x-corpus row:
+    * NOTES.md "Prefix-join scaling").
+    */
   private[graft] def gramSetsOf(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // graft_ngrams_distinct fuses the old split + transform/slice/
@@ -1203,7 +1206,9 @@ object DedupOps {
   def d20PrefixJoin(spark: SparkSession, dir: String): DataFrame =
     prefixJoinPairs(gramSets(spark, dir))
 
-  /** d20's body over any cached gramSets frame (ScalingProbe-shared). */
+  /** d20's body over any cached gramSets frame (its 10x-corpus row:
+    * NOTES.md "Prefix-join scaling").
+    */
   private[graft] def prefixJoinPairs(g: DataFrame): DataFrame =
     prefixJoinPairsAt(g, 3, 5).orderBy("doc_a", "doc_b")
 
@@ -1807,11 +1812,15 @@ object DedupOps {
     * Extra rounds past convergence are no-ops (labels are already the
     * component minima), so a caller unsure of its subgraph's diameter
     * simply asks for more rounds — value-identical once converged.
+    * Every CTE is MATERIALIZED: each round reads the previous one twice,
+    * so an inlined chain copies the pair join exponentially in rounds,
+    * and DuckDB 1.0 inlines CTEs not marked MATERIALIZED (p33 embeds a
+    * 4- and an 8-round chain).
     */
   private[graft] def d07SqlRounds(rounds: Int,
       pairsSql: String = d03Sql): String = {
     def round(k: Int): String =
-      s"""l${k} AS (
+      s"""l${k} AS MATERIALIZED (
          |  SELECT l.doc_id,
          |         least(l.label, coalesce(min(ul.label), l.label)) AS label
          |  FROM l${k - 1} l
@@ -1819,12 +1828,12 @@ object DedupOps {
          |  LEFT JOIN l${k - 1} ul ON ul.doc_id = e.u
          |  GROUP BY l.doc_id, l.label
          |)""".stripMargin
-    s"""WITH pairs AS (SELECT doc_a, doc_b FROM ($pairsSql)),
-       |edges AS (
+    s"""WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ($pairsSql)),
+       |edges AS MATERIALIZED (
        |  SELECT doc_a AS v, doc_b AS u FROM pairs
        |  UNION ALL SELECT doc_b, doc_a FROM pairs
        |),
-       |l0 AS (SELECT DISTINCT v AS doc_id, v AS label FROM edges),
+       |l0 AS MATERIALIZED (SELECT DISTINCT v AS doc_id, v AS label FROM edges),
        |${(1 to rounds).map(round).mkString(",\n")}
        |SELECT doc_id, label AS component FROM l$rounds ORDER BY doc_id""".stripMargin
   }

@@ -890,8 +890,9 @@ object MediaOps {
     shardAppendOf(m, 8192L)
   }
 
-  /** The m09 body over any (doc_id, kind, n_bytes, is_batch) frame —
-    * shared with ScalingProbe's batch-size axis.
+  /** The m09 body over any (doc_id, kind, n_bytes, is_batch) frame
+    * (its batch-size rows: NOTES.md "ScalingProbe rows for the r8-new
+    * shapes").
     */
   private[graft] def shardAppendOf(m: DataFrame, cap: Long): DataFrame = {
     val corpus = packStarts(m.filter(col("is_batch") === 0L))

@@ -894,9 +894,8 @@ object RelOps {
     gapFillCore(Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value")))
 
-  /** The w25 body over any (user_id, ts, event_id, value) frame —
-    * exposed so ScalingProbe can measure the user-count axis (VERDICT
-    * r7 item 6: the suite's biggest output had no 10x probe).
+  /** The w25 body over any (user_id, ts, event_id, value) frame (its
+    * user-count rows: NOTES.md "ScalingProbe gapfill/scd2").
     */
   private[graft] def gapFillCore(raw: DataFrame): DataFrame = {
     val e = raw
@@ -1711,8 +1710,8 @@ object RelOps {
   def w35RollingActive(spark: SparkSession, dir: String): DataFrame =
     rollingActiveOf(Tables.events(spark, dir).select("user_id", "ts"))
 
-  /** The w35 body over any (user_id, ts) frame — shared with
-    * ScalingProbe's user-count axis.
+  /** The w35 body over any (user_id, ts) frame (its user-count rows:
+    * NOTES.md "ScalingProbe pack/active").
     */
   private[graft] def rollingActiveOf(raw: DataFrame): DataFrame = {
     val ud = graft.Caches.cache(raw

@@ -350,9 +350,10 @@ object SimOps {
       .orderBy("qid", "rank")
   }
 
-  /** The banded candidate stage of [[bandedTopK]], factored out so the
-    * s09 ScalingProbe can count candidate pairs directly (the number
-    * whose growth certifies the banding stays tractable at volume).
+  /** The banded candidate stage of [[bandedTopK]], factored out so
+    * candidate pairs can be counted directly (the number whose growth
+    * certifies the banding stays tractable at volume; the 10x counts
+    * are NOTES.md's "s09/s33 banded KNN join" rows).
     *
     * `wide = false` is the registered 8-band x 8-bit layout. Its random
     * collision floor is 8 x 2^-8 ~ 3.1% of the corpus PER QUERY — fine
@@ -540,8 +541,9 @@ object SimOps {
     // re-scores only the tiny query set against the same materialized
     // codebook. Nothing corpus-sized is shared between subtrees, so
     // AQE's parallel stage submission has nothing to race (measured on
-    // the 50k-vector ScalingProbe: the old shared-cache form ran the
-    // scoring pass up to twice, 42s warm; this form is stable ~10s).
+    // 50k planted vectors, NOTES.md "ANN scaling measurement": the old
+    // shared-cache form ran the scoring pass up to twice, 42s warm;
+    // this form is stable ~10s).
     val cells = cellCentroids(v)
     val assigned = assignCells(scoreCells(v, cells))
     val probes = scoreCells(v.filter(isQuery), cells)
@@ -812,7 +814,8 @@ object SimOps {
     * graft_pq_dists kernel: same values as the
     * aggregate(sequence(...)) higher-order form, but one JVM loop per
     * pair instead of 8 interpreted lambdas (ArrayAggregate is
-    * CodegenFallback — measured 2x end-to-end on the 50k ScalingProbe).
+    * CodegenFallback — measured 2x end-to-end on 50k planted vectors,
+    * NOTES.md "ANN scaling measurement", PQ-ADC row).
     * Feeds encoding (argmin per subspace) and the per-query ADC tables.
     */
   private[graft] def pqSubDists(v: DataFrame, cb: DataFrame): DataFrame =
@@ -903,8 +906,8 @@ object SimOps {
     ivfPqTopK(graft.Caches.cache(vectors(spark, dir)),
       col("vec_id") % 50 === 0, nProbe = 2, k = 5)
 
-  /** The s14 core over any prepared vectors frame — exposed so the
-    * ScalingProbe can measure the composed index at 10x corpora.
+  /** The s14 core over any prepared vectors frame (its 10x-corpus row:
+    * NOTES.md "ANN scaling measurement", IVF+PQ composed).
     */
   private[graft] def ivfPqTopK(
       v: DataFrame, isQuery: Column, nProbe: Int, k: Int): DataFrame = {
@@ -1037,9 +1040,8 @@ object SimOps {
   def s16SparseCosine(spark: SparkSession, dir: String): DataFrame =
     sparseCosinePairs(Tables.documents(spark, dir).select("doc_id", "text"))
 
-  /** The s16 core over any (doc_id, text) frame — exposed so the
-    * ScalingProbe can measure the posting-join posture on a planted
-    * corpus (`ScalingProbe sparse <n>`).
+  /** The s16 core over any (doc_id, text) frame (its posting-join
+    * rows on a planted corpus: NOTES.md "Sparse-cosine scaling").
     */
   private[graft] def sparseCosinePairs(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)

@@ -195,7 +195,7 @@ object StreamJobs {
     val stream = spark.readStream
       .schema(spark.read.parquet(silverPath).schema)
       .parquet(silverPath)
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (_: DataFrame, _: Long) =>
         // the batch frame only signals "new data arrived"; the snapshot
         // recomputes over the full silver table (latest-per-key windows
@@ -205,10 +205,7 @@ object StreamJobs {
           .write.mode("overwrite").parquet(goldPath)
         ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.availableNow(writer, checkpoint)
   }
 
   /** Streaming upsert (the MERGE-shaped streaming sink): each micro-batch
@@ -224,7 +221,7 @@ object StreamJobs {
       tablePath: String,
       checkpoint: String,
       partitionCol: String = "date"): Unit = {
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-check: that would re-evaluate the batch source
         // once per trigger just to decide, and dynamic partition
@@ -232,10 +229,7 @@ object StreamJobs {
         graft.sources.Lakehouse.upsertPartitions(batch, tablePath, partitionCol)
         ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.availableNow(writer, checkpoint)
   }
 
   /** Streaming INCREMENTAL near-dup detection — the continual-ingest
@@ -276,7 +270,7 @@ object StreamJobs {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
     }
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val b = batch.select("doc_id", "text").persist()
@@ -313,10 +307,7 @@ object StreamJobs {
           newSh.write.mode("append").parquet(docsPath)
         } finally { b.unpersist(); () }
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.availableNow(writer, checkpoint)
   }
 
   /** Streaming heavy-hitter tracking: a corpus-lifetime Misra-Gries
@@ -354,7 +345,7 @@ object StreamJobs {
       failpoint: (String, Long) => Unit = (_, _) => ()): Unit = {
     import graft.functions.MisraGriesAgg
     import scala.collection.mutable
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         graft.functions.GraftFunctions.register(spark)
@@ -385,10 +376,7 @@ object StreamJobs {
         VersionedState.prune(spark, accumRoot, batchId)
         ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.availableNow(writer, checkpoint)
   }
 
   /** Read the current lifetime summary as (tok, count_lb, n): the

@@ -2,8 +2,7 @@ package graft.velib
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.VersionedState
+import graft.streaming.{Drain, VersionedState}
 
 /** The full bronze -> silver -> gold -> serving loop as ONE streaming
   * invocation — the Spark-native form of the reference's eager asset
@@ -37,9 +36,12 @@ object Pipeline {
 
   /** SilverJob's parsed wire columns -> the canonical schema the
     * enrichment consumes. `seq` is a deterministic per-row tiebreaker
-    * (hash of the full wire record) standing in for the events table's
-    * monotone seq — ties on (station, last_reported) break identically
-    * on every run.
+    * (xxhash64 of `stationcode`, `duedate` and `numbikesavailable`)
+    * standing in for the events table's monotone seq — ties on
+    * (station, last_reported) break identically on every run. An exact
+    * re-send of a record hashes those three columns to the same `seq`,
+    * so it still ties with its original on (last_reported, seq) and
+    * which copy sorts first is not pinned.
     */
   def canonical(parsed: DataFrame): DataFrame = parsed.select(
     col("stationcode").as("station_code"),
@@ -90,7 +92,7 @@ object Pipeline {
     val statePath = s"$root/state"
     val readingT =
       "STRUCT<ts: TIMESTAMP, seq: BIGINT, bikes: INT, name: STRING>"
-    val q = SilverJob.parseRaw(spark.readStream.schema("value STRING")
+    val writer = SilverJob.parseRaw(spark.readStream.schema("value STRING")
         .text(inputDir)).writeStream
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         // persist: the body runs several actions over the batch (silver
@@ -182,15 +184,7 @@ object Pipeline {
         }
         ()
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // one progress event per BATCH: slow foreachBatch bodies emit
-    // interim progress for the same batchId, which a plain sum
-    // double-counts
-    q.recentProgress.groupBy(_.batchId)
-      .map(_._2.last.numInputRows).sum
+    Drain.availableNow(writer, s"$root/ckpt")
   }
 
   /** Drain `inputDir` (JSON-lines status files, the Kafka stand-in) and
@@ -202,7 +196,7 @@ object Pipeline {
   def runEndToEnd(spark: SparkSession, inputDir: String, root: String): Long = {
     val silverPath = s"$root/silver"
     val raw = spark.readStream.schema("value STRING").text(inputDir)
-    val q = SilverJob.parseRaw(raw).writeStream
+    val writer = SilverJob.parseRaw(raw).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").partitionBy("date").parquet(silverPath)
         val enriched = EnrichJob.enrich(
@@ -215,14 +209,6 @@ object Pipeline {
         graft.Caches.unpersistAll() // serving's intra-query target cache
         ()
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // one progress event per BATCH: slow foreachBatch bodies emit
-    // interim progress for the same batchId, which a plain sum
-    // double-counts
-    q.recentProgress.groupBy(_.batchId)
-      .map(_._2.last.numInputRows).sum
+    Drain.availableNow(writer, s"$root/ckpt")
   }
 }

@@ -46,19 +46,11 @@ object SilverJob {
     val raw = spark.readStream
       .schema("value STRING")
       .text(inputDir)
-    val parsed = parseRaw(raw)
-    val q = parsed.writeStream
+    graft.streaming.Drain.availableNow(parseRaw(raw).writeStream
       .format("parquet")
       .option("path", outputPath)
-      .option("checkpointLocation", checkpoint)
       .partitionBy("date")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // AvailableNow may split the drain into several micro-batches
-    // (maxFilesPerTrigger); lastProgress alone would undercount.
-    q.recentProgress.map(_.numInputRows).sum
+      .outputMode("append"), checkpoint)
   }
 
   /** Kafka-shaped producer projection (S3): typed columns -> (key, value)
