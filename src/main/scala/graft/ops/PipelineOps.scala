@@ -1803,9 +1803,7 @@ object PipelineOps {
   }
 
   /** p37's fold from per-determinant distinct-dependent counts
-    * (table_name, determinant, dependent, det, n_dep) — shared with
-    * the streaming twin's board (E256), whose update table collapses
-    * to exactly these rows via a monotone max.
+    * (table_name, determinant, dependent, det, n_dep).
     */
   private[graft] def fdFoldOf(grp: DataFrame): DataFrame =
     grp.groupBy("table_name", "determinant", "dependent")
@@ -1897,10 +1895,7 @@ object PipelineOps {
   }
 
   /** p38's fold from per-value membership rows (fk_table, fk_column,
-    * pk_table, pk_column, v, n_rows, in_pk with null = absent) —
-    * shared with the streaming twin's board (E258), whose update table
-    * collapses to exactly these rows via monotone maxes (n_rows only
-    * grows; pk membership flips 0→1 once).
+    * pk_table, pk_column, v, n_rows, in_pk with null = absent).
     */
   private[graft] def indFoldOf(joined: DataFrame): DataFrame = {
     val tags = Seq("fk_table", "fk_column", "pk_table", "pk_column")

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.DecimalType
 object RelOps {
 
   /** Event-time tumbling window aggregation: Spark's `window()` operator
-    * (the batch twin of the streaming T5 upgrade; same function runs under
-    * readStream+watermark — see StreamJobs). 1-hour buckets are
-    * epoch-aligned in both engines, so the oracle is date_trunc.
+    * (the same function runs unchanged under readStream+watermark).
+    * 1-hour buckets are epoch-aligned in both engines, so the oracle is
+    * date_trunc.
     */
   def w01TumblingAgg(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
@@ -916,10 +916,10 @@ object RelOps {
         explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour"))
     val wFill = Window.partitionBy(col("user_id")).orderBy(col("hour"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    spine
-      .join(obs, spine("user_id") === obs("user_id") &&
-        spine("hour") === obs("h"), "left")
-      .select(spine("user_id"), col("hour"),
+    spine.as("s")
+      .join(obs.as("o"), col("s.user_id") === col("o.user_id") &&
+        col("s.hour") === col("o.h"), "left")
+      .select(col("s.user_id"), col("hour"),
         coalesce(col("n"), lit(0L)).as("n_events"),
         col("obs_value"),
         when(col("h").isNull, 1L).otherwise(0L).as("is_gap"))
@@ -1114,10 +1114,7 @@ object RelOps {
     tClosenessFromCells(ev.groupBy("hr", "vb", "event_type")
       .agg(count(lit(1)).as("n_gt")))
 
-  /** w53's fold from pre-counted (hr, vb, event_type, n_gt) cells —
-    * shared with the streaming twin's board (E254), whose update table
-    * folds to exactly these cells via a monotone max.
-    */
+  /** w53's fold from pre-counted (hr, vb, event_type, n_gt) cells. */
   private[graft] def tClosenessFromCells(cellRaw: DataFrame): DataFrame = {
     val cell = graft.Caches.cache(cellRaw)
     val glob = graft.Caches.cache(
@@ -1253,9 +1250,7 @@ object RelOps {
   }
 
   /** w54's finisher from per-stream totals (stream, n_events, n_late,
-    * max_late_us) plus the |streams|-row label frame — shared with the
-    * streaming twin's board (E260), whose update table collapses to
-    * exactly these totals via monotone maxes.
+    * max_late_us) plus the |streams|-row label frame.
     */
   private[graft] def disorderFinish(totals: DataFrame,
       names: DataFrame): DataFrame =
@@ -2131,8 +2126,7 @@ object RelOps {
   }
 
   /** w44's report finisher over a per-purchase (first_ch, last_ch)
-    * frame — shared with the streaming twin's accumulated-results fold
-    * (the lakehouse-as-accumulator pattern).
+    * frame.
     */
   private[graft] def w44Report(spark: SparkSession, perPurchase: DataFrame)
       : DataFrame = {

@@ -13,24 +13,29 @@ import graft.streaming.{Drain, VersionedState}
   *   1. parsed batch APPENDS to the date-partitioned silver table
   *      (the SilverJob sink shape);
   *   2. enrichment + gold alerts RECOMPUTE over silver-so-far and
-  *      overwrite the gold snapshot (the StreamJobs.goldRefresh shape —
-  *      gold needs full-history windows, so it is a snapshot, not an
-  *      increment);
+  *      overwrite the gold snapshot (gold needs full-history windows,
+  *      so it is a snapshot, not an increment);
   *   3. the serving layer's critical-alerts endpoint re-materializes
   *      from the fresh gold + enriched history.
   *
+  * The loop has two forms, and gold's `trend` (the enriched `net_flow`:
+  * bikes minus the station's previous reading) two definitions:
+  *   - `runEndToEnd` is steps 1-3 above. Its `trend` is `EnrichJob`'s
+  *     lag over silver-so-far.
+  *   - `runEndToEndIncremental` replaces step 2's history scan with an
+  *     O(stations) per-station state table and writes gold only. Its
+  *     `trend` is the difference of the state's top-2 readings by
+  *     (ts, seq).
+  *
   * At scale step 2 is the one to bound. GoldAlerts' own W1 dedup is
   * horizon-filtered before its window, but the UPSTREAM enrichment's
-  * baseline_avg is a running mean over all history, so this per-batch
-  * recompute honestly scans silver-so-far — fine at the reference's
-  * volumes (one city's stations), not at 100 TB. The bounded shapes,
-  * both already in the suite, are: (a) keyed streaming state for the
-  * per-station aggregates (StreamJobs' on-stream net_flow /
-  * transformWithState running aggregates), or (b) a compact per-station
-  * running-aggregate table maintained incrementally (the
-  * Lakehouse.upsertPartitions discipline), so the snapshot recompute
-  * reads O(stations) aggregate rows plus the horizon's date partitions
-  * (S10 pruning) instead of raw history.
+  * baseline_avg is a running mean over all history, so the recompute
+  * form honestly scans silver-so-far — fine at the reference's volumes
+  * (one city's stations), not at 100 TB. The incremental form is the
+  * bounded shape: a compact per-station running-aggregate table
+  * maintained per micro-batch (the Lakehouse.upsertPartitions
+  * discipline), so gold reads O(stations) state rows instead of raw
+  * history.
   */
 object Pipeline {
 
@@ -52,8 +57,8 @@ object Pipeline {
     xxhash64(col("stationcode"), col("duedate"),
       col("numbikesavailable")).as("seq"))
 
-  /** Incremental end-to-end variant: the (b) shape from the Scaladoc
-    * above, AS CODE. Silver appends as usual, but the gold snapshot
+  /** Incremental end-to-end variant: the bounded shape from the
+    * object Scaladoc. Silver appends as usual, but the gold snapshot
     * derives from an O(stations) per-station aggregate STATE table
     * maintained per micro-batch — never from silver history:
     *

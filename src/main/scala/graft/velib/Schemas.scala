@@ -20,23 +20,9 @@ object Schemas {
     StructField("ebike", IntegerType),
     StructField("duedate", StringType) // ISO-8601; parsed with to_timestamp
   ))
-
-  /** Enriched silver schema (SURVEY.md §1.4, reconstructed from consumers
-    * at reference `src/assets/velib_alerte.py:45-57` / `src/api.py:48-59`).
-    */
-  val enriched: StructType = StructType(Seq(
-    StructField("station_code", StringType),
-    StructField("station_name", StringType),
-    StructField("bikes_available", IntegerType),
-    StructField("docks_available", IntegerType),
-    StructField("net_flow", IntegerType),
-    StructField("moving_avg_1h", DoubleType),
-    StructField("last_reported", TimestampType),
-    StructField("date", DateType)
-  ))
 }
 
-/** Typed row models used at the ingestion/parse boundary. */
+/** Typed row model used at the ingestion/parse boundary. */
 case class VelibStatus(
     stationcode: String,
     name: String,
@@ -45,10 +31,3 @@ case class VelibStatus(
     mechanical: Integer,
     ebike: Integer,
     duedate: String)
-
-case class StationInfo(
-    station_id: String,
-    name: String,
-    capacity: Integer,
-    lat: Double,
-    lon: Double)

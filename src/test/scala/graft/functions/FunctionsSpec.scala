@@ -11,32 +11,6 @@ import org.apache.spark.sql.functions._
 class FunctionsSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("CentsSummary typed Aggregator equals the SQL aggregate, any split") {
-    val amounts = Seq(12.34, -5.00, 0.01, 99.99, 12.34, 7.5)
-    val cents = amounts.map(a => math.round(a * 100))
-    // typed path: Dataset[Long] + TypedColumn, forced through 1 and 3
-    // partitions — merge order must not change any output value
-    val results = Seq(1, 3).map { parts =>
-      cents.toDS().repartition(parts)
-        .select(TypedAggs.CentsSummary.toColumn).head()
-    }
-    assert(results.distinct.size == 1)
-    val r = results.head
-    // untyped parity: same numbers as the SQL aggregate over doubles
-    val sql = cents.toDF("c").agg(
-      count(lit(1)).as("n"), sum(col("c")).as("s"),
-      min(col("c")).as("mn"), max(col("c")).as("mx")).head()
-    assert(r.n == sql.getLong(0))
-    assert(r.total == sql.getLong(1) / 100.0)
-    assert(r.mean == sql.getLong(1) / 100.0 / sql.getLong(0))
-    assert(r.min == sql.getLong(2) / 100.0 && r.max == sql.getLong(3) / 100.0)
-    // grouped typed path: KeyValueGroupedDataset.agg with the TypedColumn
-    val grouped = cents.toDS().groupByKey(c => (c % 2 == 0))
-      .agg(TypedAggs.CentsSummary.toColumn).collect().toMap
-    assert(grouped.keySet == Set(true, false))
-    assert(grouped.values.map(_.n).sum == cents.size)
-  }
-
   test("graft_minhash equals the conv(md5)/universal-hash HOF chain") {
     GraftFunctions.register(spark)
     val p = GraftHash.P

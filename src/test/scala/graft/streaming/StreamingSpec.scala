@@ -1,11 +1,10 @@
 package graft.streaming
 
-import graft.{SparkTestBase, Tables}
+import graft.SparkTestBase
 import graft.velib.SilverJob
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -21,77 +20,6 @@ class StreamingSpec extends SparkTestBase {
     Ev(3, ts("2024-01-01 11:05:00"), 2, "b", 3.0),
     Ev(4, ts("2024-01-01 12:40:00"), 2, "b", 4.0),
     Ev(5, ts("2024-01-01 12:41:00"), 1, "a", 5.0))
-
-  test("tumblingCounts: streaming complete-mode equals batch result") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(rows: _*)
-    val q = StreamJobs.tumblingCounts(mem.toDF())
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("tumbling")
-      .orderBy("bucket_start", "event_type")
-      .collect().map(_.toSeq).toSeq
-    val batch = StreamJobs.tumblingCounts(rows.toDF())
-      .orderBy("bucket_start", "event_type")
-      .collect().map(_.toSeq).toSeq
-    assert(streamed == batch)
-    assert(streamed.map(_(2)) == Seq(2L, 1L, 1L, 1L)) // 10h a:2; 11h b:1; 12h a:1, b:1
-  }
-
-  test("ohlcBars: streaming complete-mode equals the batch w33 twin") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(rows: _*)
-    val q = StreamJobs.ohlcBars(mem.toDF())
-      .writeStream.format("memory").queryName("ohlc")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("ohlc")
-      .orderBy("event_type", "hour").collect().map(_.toSeq).toSeq
-    val batch = graft.ops.RelOps.ohlcBars(
-        rows.toDF().select("event_type", "ts", "event_id", "value"))
-      .orderBy("event_type", "hour").collect().map(_.toSeq).toSeq
-    assert(streamed == batch)
-    // the 10h "a" bar: open 1.0 (10:05), close 2.0 (10:55)
-    val a10 = streamed.head
-    assert(a10(2) == 2L && a10(3) == 1.0 && a10(6) == 2.0)
-  }
-
-  test("slidingCounts: each event lands in exactly two 2h/1h windows") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(rows: _*)
-    val q = StreamJobs.slidingCounts(mem.toDF())
-      .writeStream.format("memory").queryName("sliding")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val total = spark.table("sliding").agg(sum("n")).first().getLong(0)
-    assert(total == rows.length * 2) // every event counted in 2 windows
-    // spot-check: the 10:00-12:00 window holds both 10h and 11h events
-    val w10 = spark.table("sliding")
-      .filter(col("bucket_start") === ts("2024-01-01 10:00:00"))
-      .agg(sum("n")).first().getLong(0)
-    assert(w10 == 3)
-  }
-
-  test("enrichWithDim: stream-static join is stateless and keeps unmatched rows") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq(("a", "alpha"), ("c", "gamma")).toDF("event_type", "label")
-    val mem = MemoryStream[Ev]
-    mem.addData(rows: _*)
-    val q = StreamJobs.enrichWithDim(mem.toDF(), dim)
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("enriched")
-      .select("event_id", "label").as[(Long, Option[String])]
-      .collect().toMap
-    assert(out.size == rows.length) // left join: nothing dropped
-    assert(out(1L).contains("alpha") && out(5L).contains("alpha"))
-    assert(out(3L).isEmpty && out(4L).isEmpty) // 'b' has no dim row
-  }
 
   test("observe() attaches free metrics to the stream — no second scan") {
     // production observability: row counts / sums ride the existing scan
@@ -139,545 +67,6 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.table("paced").count() == 30) // exactly once, no loss
   }
 
-  test("incremental near-dup: a batch-2 arrival pairs with its batch-1 twin") {
-    val root = Files.createTempDirectory("graft_inc_neardup")
-    val srcDir = s"$root/src"
-    val twin = (0 until 60).map(i => f"tok$i%04d").mkString(" ")
-    val noise = (100 until 160).map(i => f"zzz$i%04d").mkString(" ")
-    // batch 1: doc 1 (the future twin) + unrelated doc 10; batch 2:
-    // doc 2 with doc 1's text, plus doc 3/4 as an INTRA-batch twin pair
-    Seq(1L -> twin, 10L -> noise).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$srcDir/f0")
-    val intra = (200 until 260).map(i => f"qqq$i%04d").mkString(" ")
-    Seq(2L -> twin, 3L -> intra, 4L -> intra).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$srcDir/f1")
-    // force f0 before f1 (file source orders by modification time)
-    new java.io.File(s"$srcDir/f0").listFiles().foreach(
-      _.setLastModified(System.currentTimeMillis() - 60000))
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$srcDir/f*")
-    StreamJobs.incrementalNearDup(stream,
-      s"$root/bands", s"$root/docs", s"$root/edges", s"$root/ckpt")
-    val edges = spark.read.parquet(s"$root/edges")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // cross-batch pair (1, 2) AND intra-batch pair (3, 4); noise pairs
-    // with nothing
-    assert(edges == Set((1L, 2L), (3L, 4L)), s"got $edges")
-    // the accumulated band/doc tables now hold every arrival
-    assert(spark.read.parquet(s"$root/docs").count() == 5)
-    // a restart with no new files appends nothing (checkpointed)
-    StreamJobs.incrementalNearDup(
-      spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/f*"),
-      s"$root/bands", s"$root/docs", s"$root/edges", s"$root/ckpt")
-    assert(spark.read.parquet(s"$root/edges").count() == edges.size)
-    assert(spark.read.parquet(s"$root/docs").count() == 5)
-  }
-
-  test("streaming heavy tokens: lifetime summary accumulates across " +
-      "batches, exact n, checkpointed restart is a no-op") {
-    val root = Files.createTempDirectory("graft_stream_heavy")
-    val srcDir = s"$root/src"
-    // one token is heavy only ACROSS batches (300 + 300 of 1200 total);
-    // tail tokens are unique per batch — vocab larger than capacity 9
-    def tail(pfx: String) = (0 until 300).map(i => f"$pfx$i%04d")
-    (Seq.fill(300)("hot") ++ tail("a")).toDF("tok")
-      .coalesce(1).write.parquet(s"$srcDir/f0")
-    (Seq.fill(300)("hot") ++ tail("b")).toDF("tok")
-      .coalesce(1).write.parquet(s"$srcDir/f1")
-    new java.io.File(s"$srcDir/f0").listFiles().foreach(
-      _.setLastModified(System.currentTimeMillis() - 60000))
-    def src() = spark.readStream.schema("tok STRING")
-      .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/f*")
-    StreamJobs.streamingHeavyTokens(src(), s"$root/accum", s"$root/ckpt",
-      capacity = 9)
-    val snap = StreamJobs.heavyTokensSnapshot(spark, s"$root/accum")
-      .as[(String, Long, Long)].collect()
-    // exact lifetime n; the cross-batch-heavy token survived with its
-    // count within the n/(capacity+1) bound; summary stayed bounded
-    assert(snap.forall(_._3 == 1200L))
-    assert(snap.length <= 9)
-    val hot = snap.find(_._1 == "hot")
-    assert(hot.isDefined, s"cross-batch heavy key lost: ${snap.toSeq}")
-    assert(hot.get._2 <= 600L && hot.get._2 >= 600L - 1200L / 10)
-    // restart with no new files: same version, nothing re-merged
-    StreamJobs.streamingHeavyTokens(src(), s"$root/accum", s"$root/ckpt",
-      capacity = 9)
-    val snap2 = StreamJobs.heavyTokensSnapshot(spark, s"$root/accum")
-      .as[(String, Long, Long)].collect()
-    assert(snap2.toSeq == snap.toSeq)
-    // crash AFTER the version write, BEFORE checkpoint commit: the
-    // replayed batch must re-merge from the predecessor, never the
-    // orphan version the crashed run wrote — n stays exact, not doubled
-    (Seq.fill(300)("hot") ++ tail("c")).toDF("tok")
-      .coalesce(1).write.parquet(s"$srcDir/f2")
-    val boom = intercept[Exception] {
-      StreamJobs.streamingHeavyTokens(src(), s"$root/accum", s"$root/ckpt",
-        capacity = 9,
-        failpoint = (p, _) => if (p == "version-written")
-          throw new RuntimeException("injected crash"))
-    }
-    assert(boom.toString.contains("injected crash") ||
-      Option(boom.getCause).exists(_.toString.contains("injected crash")))
-    StreamJobs.streamingHeavyTokens(src(), s"$root/accum", s"$root/ckpt",
-      capacity = 9)
-    val snap3 = StreamJobs.heavyTokensSnapshot(spark, s"$root/accum")
-      .as[(String, Long, Long)].collect()
-    assert(snap3.forall(_._3 == 1800L),
-      s"replay double-counted: ${snap3.toSeq}")
-    val hot3 = snap3.find(_._1 == "hot").get
-    assert(hot3._2 <= 900L && hot3._2 >= 900L - 1800L / 10)
-  }
-
-  test("composite stream: dedup -> static enrich -> tumbling agg in one query") {
-    // the full streaming pipeline shape chained as ONE streaming query:
-    // watermark dedup feeds the broadcast dim join feeds the windowed agg
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq(("a", "alpha"), ("b", "beta")).toDF("event_type", "label")
-    val mem = MemoryStream[Ev]
-    mem.addData(rows ++ Seq(rows.head): _*) // one duplicate event_id
-    // dedupedStream already watermarks ts; the downstream window reuses
-    // that watermark (re-calling withWatermark would redefine it, which
-    // streaming disallows across stateful operators)
-    val chained = StreamJobs.enrichWithDim(
-        StreamJobs.dedupedStream(mem.toDF()), dim)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val q = chained.writeStream.format("memory").queryName("composite")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val total = spark.table("composite").agg(sum("n")).first().getLong(0)
-    assert(total == rows.length) // duplicate dropped, nothing else lost
-  }
-
-  test("sessionCounts: 30-min gap closes a session (session_window)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(rows: _*)
-    val q = StreamJobs.sessionCounts(mem.toDF())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("sessions")
-      .orderBy("user_id", "session_start")
-      .select("user_id", "n_events").as[(Long, Long)].collect().toSeq
-    // user 1: 10:05 | 10:55 (50min gap -> new) | 12:41; user 2: 11:05 | 12:40
-    assert(got == Seq((1L, 1L), (1L, 1L), (1L, 1L), (2L, 1L), (2L, 1L)))
-  }
-
-  test("clickAfterView: stream-stream join matches only in-range view/click pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    // user 1: view 10:00, clicks 10:20 (in range) and 10:45 (> 30min, out);
-    // user 2: view 11:00, click 10:50 (click BEFORE view, out)
-    views.addData(
-      Ev(101, ts("2024-01-01 10:00:00"), 1, "view", 0),
-      Ev(102, ts("2024-01-01 11:00:00"), 2, "view", 0))
-    clicks.addData(
-      Ev(201, ts("2024-01-01 10:20:00"), 1, "click", 0),
-      Ev(202, ts("2024-01-01 10:45:00"), 1, "click", 0),
-      Ev(203, ts("2024-01-01 10:50:00"), 2, "click", 0))
-    val q = StreamJobs.clickAfterView(views.toDF(), clicks.toDF())
-      .writeStream.format("memory").queryName("ssjoin")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("ssjoin")
-      .select("user_id", "click_id", "view_id").as[(Long, Long, Long)]
-      .collect().toSet
-    assert(got == Set((1L, 201L, 101L)))
-  }
-
-  test("viewClickOuter: unmatched views emit null ONLY after the watermark closes the range") {
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    // user 1's view gets a click in range; user 2's view never does
-    views.addData(
-      Ev(101, ts("2024-01-01 10:00:00"), 1, "view", 0),
-      Ev(102, ts("2024-01-01 10:00:00"), 2, "view", 0))
-    clicks.addData(Ev(201, ts("2024-01-01 10:20:00"), 1, "click", 0))
-    val q = StreamJobs.viewClickOuter(views.toDF(), clicks.toDF())
-      .writeStream.format("memory").queryName("ssouter")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    def got() = spark.table("ssouter")
-      .select($"user_id", $"view_id", $"click_id")
-      .as[(Long, Long, Option[Long])].collect().toSet
-    // before the watermark passes 10:30 (range end) + 10 min delay, the
-    // unmatched view MUST NOT have emitted — a click could still arrive
-    assert(got() == Set((1L, 101L, Some(201L))),
-      s"outer row emitted before watermark passage: ${got()}")
-    // advance the watermark beyond 10:40 on BOTH inputs (the global
-    // watermark is the MIN across streams): 11:00 events move it to
-    // 10:50 > view_ts + 30m + 10m
-    // (user 8 has no clicks, and the watermark never reaches 11:40 —
-    // this nudge view stays buffered and never emits)
-    views.addData(Ev(103, ts("2024-01-01 11:00:00"), 8, "view", 0))
-    clicks.addData(Ev(202, ts("2024-01-01 11:00:00"), 9, "click", 0))
-    q.processAllAvailable()
-    // watermark updates take effect at the NEXT batch — nudge one more
-    clicks.addData(Ev(203, ts("2024-01-01 11:01:00"), 9, "click", 0))
-    q.processAllAvailable()
-    q.stop()
-    assert(got() == Set((1L, 101L, Some(201L)), (2L, 102L, None)),
-      s"unmatched view missing after watermark passage: ${got()}")
-  }
-
-  test("streamingUpsert: per-batch dynamic overwrite touches only hot partitions") {
-    val src = Files.createTempDirectory("graft_upsert_src")
-    val table = Files.createTempDirectory("graft_upsert_table").toString
-    val ckpt = Files.createTempDirectory("graft_upsert_ckpt").toString
-    // seed the table with two date partitions
-    Seq((1L, "2024-01-01", "old"), (2L, "2024-01-02", "old"))
-      .toDF("id", "date", "v")
-      .write.mode("overwrite").partitionBy("date").parquet(table)
-    val d1Files = new java.io.File(s"$table/date=2024-01-01")
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    // stream an update for 2024-01-02 ONLY
-    Files.writeString(src.resolve("batch1.jsonl"),
-      """{"id": 2, "date": "2024-01-02", "v": "new"}""" + "\n" +
-        """{"id": 3, "date": "2024-01-02", "v": "new"}""" + "\n")
-    val stream = spark.readStream
-      .schema("id LONG, date STRING, v STRING").json(src.toString)
-    StreamJobs.streamingUpsert(stream, table, ckpt)
-    val after = spark.read.parquet(table)
-      .select("id", "date", "v").as[(Long, String, String)].collect().toSet
-    // 2024-01-02 fully replaced; 2024-01-01 untouched (same files on disk)
-    assert(after == Set((1L, "2024-01-01", "old"),
-      (2L, "2024-01-02", "new"), (3L, "2024-01-02", "new")))
-    val d1After = new java.io.File(s"$table/date=2024-01-01")
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    assert(d1After == d1Files)
-    // restart with no new data: checkpoint makes it a no-op
-    StreamJobs.streamingUpsert(
-      spark.readStream.schema("id LONG, date STRING, v STRING").json(src.toString),
-      table, ckpt)
-    assert(spark.read.parquet(table).count() == 3)
-  }
-
-  test("session_window streaming equals batch gaps-and-islands boundaries") {
-    implicit val sqlCtx = spark.sqlContext
-    // denser fixture: deterministic pseudo-random gaps around the 30-min cut
-    val dense = (1 to 120).map { i =>
-      val user = i % 4
-      val minuteStep = (i * 37 % 53) // 0..52 minutes, straddles the timeout
-      Ev(i.toLong, ts(f"2024-01-01 ${6 + (i * minuteStep / 60) % 12}%02d:${minuteStep}%02d:00"),
-        user.toLong, "a", i.toDouble)
-    }
-    val mem = MemoryStream[Ev]
-    mem.addData(dense: _*)
-    val q = StreamJobs.sessionCounts(mem.toDF())
-      .writeStream.format("memory").queryName("sess_eq")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("sess_eq")
-      .select("user_id", "session_start", "n_events")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-    // batch twin: session = running sum of >30min breaks; start=min(ts)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val batch = dense.toDF()
-      .withColumn("gap", unix_micros(col("ts")) -
-        unix_micros(lag(col("ts"), 1).over(w)))
-      .withColumn("brk", when(col("gap").isNull || col("gap") > 1800L * 1000000L, 1)
-        .otherwise(0))
-      .withColumn("sid", sum(col("brk")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "sid")
-      .agg(min(col("ts")).as("session_start"), count(lit(1)).as("n_events"))
-      .select("user_id", "session_start", "n_events")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-    assert(streamed == batch)
-  }
-
-  test("dedupedStream: duplicate event ids across batches emit once") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamJobs.dedupedStream(mem.toDF())
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    mem.addData(rows: _*)
-    q.processAllAvailable()
-    mem.addData(rows.take(3): _*) // exact duplicates of earlier events
-    // same id, DIFFERENT timestamp, within the watermark delay of the
-    // original (id 5 @ 12:41, watermark 12:31): id-only dedup must drop
-    // it — the old (event_id, ts) key would have let it through
-    mem.addData(Ev(5, ts("2024-01-01 12:45:00"), 1, "a", 5.0))
-    mem.addData(Ev(6, ts("2024-01-01 12:42:00"), 1, "a", 6.0))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("dedup")
-    assert(got.count() == 6) // 5 originals + 1 new; all re-sends dropped
-    assert(got.select("event_id").distinct().count() == 6)
-  }
-
-  test("runningUserMax: flatMapGroupsWithState carries state across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[UserEvent]
-    val q = StreamJobs.runningUserMax(mem.toDS())
-      .writeStream.format("memory").queryName("usermax")
-      .outputMode("update").start()
-    mem.addData(UserEvent(1, 5.0), UserEvent(1, 3.0), UserEvent(2, 7.0))
-    q.processAllAvailable()
-    mem.addData(UserEvent(1, 9.0), UserEvent(2, 1.0))
-    q.processAllAvailable(); q.stop()
-    // last update per user reflects all batches
-    val last = spark.table("usermax")
-      .groupBy("user_id")
-      .agg(max("n").as("n"), max("max_value").as("mx"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(last == Set((1L, 3L, 9.0), (2L, 2L, 7.0)))
-  }
-
-  test("runningUserMaxTws: transformWithState matches flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    // (rocksdbjni ships with Spark); restore the default after so the
-    // HDFS-backed suites are unaffected.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[UserEvent]
-      val q = StreamJobs.runningUserMaxTws(mem.toDS())
-        .writeStream.format("memory").queryName("usermax_tws")
-        .outputMode("update").start()
-      mem.addData(UserEvent(1, 5.0), UserEvent(1, 3.0), UserEvent(2, 7.0))
-      q.processAllAvailable()
-      mem.addData(UserEvent(1, 9.0), UserEvent(2, 1.0))
-      q.processAllAvailable(); q.stop()
-      // same per-user final state the fMGWS spec pins
-      val last = spark.table("usermax_tws")
-        .groupBy("user_id")
-        .agg(max("n").as("n"), max("max_value").as("mx"))
-        .as[(Long, Long, Double)].collect().toSet
-      assert(last == Set((1L, 3L, 9.0), (2L, 2L, 7.0)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("runningTypeCountsTws: MapState counts accumulate across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[TypedEvent]
-      val q = StreamJobs.runningTypeCountsTws(mem.toDS())
-        .writeStream.format("memory").queryName("typecounts")
-        .outputMode("update").start()
-      mem.addData(TypedEvent(1, "click"), TypedEvent(1, "click"),
-        TypedEvent(1, "view"), TypedEvent(2, "view"))
-      q.processAllAvailable()
-      mem.addData(TypedEvent(1, "click"), TypedEvent(2, "error"))
-      q.processAllAvailable(); q.stop()
-      // final count per (user, type) across both batches
-      val last = spark.table("typecounts")
-        .groupBy("user_id", "event_type").agg(max("n").as("n"))
-        .as[(Long, String, Long)].collect().toSet
-      assert(last == Set((1L, "click", 3L), (1L, "view", 1L),
-        (2L, "view", 1L), (2L, "error", 1L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("sessionCloseTws: event-time timer emits the session only after watermark passage") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[SessionEvent]
-      val q = StreamJobs.sessionCloseTws(mem.toDS(), gapMs = 30L * 60 * 1000)
-        .writeStream.format("memory").queryName("sess_tws")
-        .outputMode("append").start()
-      // batch 1: user 1's session [10:00, 10:05] -> timer armed at 10:35;
-      // watermark still 0, so nothing can emit
-      mem.addData(SessionEvent(1, ts("2024-01-01 10:00:00")),
-        SessionEvent(1, ts("2024-01-01 10:05:00")))
-      q.processAllAvailable()
-      assert(spark.table("sess_tws").isEmpty, "no emission before watermark")
-      // batch 2: unrelated user at 11:30 advances the watermark past the
-      // 10:35 timer (the engine schedules a no-data batch on watermark
-      // change, so processAllAvailable includes the timer firing):
-      // user 1's session closes; user 2's (timer 12:00) stays open
-      mem.addData(SessionEvent(2, ts("2024-01-01 11:30:00")))
-      q.processAllAvailable(); q.stop()
-      val got = spark.table("sess_tws")
-        .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
-        .collect().toSet
-      assert(got == Set((1L, ts("2024-01-01 10:00:00"),
-        ts("2024-01-01 10:05:00"), 2L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("sessionCloseTws: an armed event-time timer survives a " +
-      "checkpointed restart and fires in a later query instance") {
-    // The 10:35 close-timer is armed by query instance 1 and must fire
-    // in a LATER instance once the restored watermark passes it — lost
-    // timers (or a lost watermark) mean the session never emits. The
-    // emission must also happen exactly once across instances.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sess_restart")
-    try {
-      val in = s"$tmp/in"; val out = s"$tmp/out"; val cp = s"$tmp/cp"
-      val sch = implicitly[org.apache.spark.sql.Encoder[SessionEvent]].schema
-      def feed(rows: SessionEvent*): Unit =
-        spark.createDataset(rows.toIndexedSeq).toDF()
-          .coalesce(1).write.mode("append").parquet(in)
-      def drain(): Unit = {
-        // append mode -> the parquet FILE sink works directly, no
-        // foreachBatch needed (the emission is final on append)
-        val q = StreamJobs.sessionCloseTws(
-            spark.readStream.schema(sch).parquet(in).as[SessionEvent],
-            gapMs = 30L * 60 * 1000)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      // instance 1: user 1's session [10:00, 10:05] arms a 10:35 timer;
-      // the watermark is still below it, so nothing emits
-      feed(SessionEvent(1, ts("2024-01-01 10:00:00")),
-        SessionEvent(1, ts("2024-01-01 10:05:00")))
-      drain()
-      assert(spark.read.schema(StructType(Seq(
-          StructField("user_id", LongType), StructField("t_first", TimestampType),
-          StructField("t_last", TimestampType), StructField("n_events", LongType))))
-        .parquet(out).isEmpty, "no emission before the watermark passes the timer")
-      // instance 2: an 11:30 event advances the watermark past 10:35 at
-      // batch end; instance 3's data batch (12:30) then runs UNDER the
-      // restored 11:30 watermark, so the restored timer must fire there
-      // at the latest (AvailableNow stops after data, so the
-      // watermark-change no-data batch may or may not run per instance
-      // — spanning two instances makes the assert scheduler-proof)
-      feed(SessionEvent(2, ts("2024-01-01 11:30:00")))
-      drain()
-      feed(SessionEvent(3, ts("2024-01-01 12:30:00")))
-      drain()
-      val got = spark.read.parquet(out)
-        .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
-        .collect().toSeq
-      assert(got.count(_._1 == 1L) == 1,
-        s"user 1's session must emit EXACTLY once across instances: $got")
-      assert(got.filter(_._1 == 1L).head ==
-        ((1L, ts("2024-01-01 10:00:00"), ts("2024-01-01 10:05:00"), 2L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
-
-  test("recentValuesTws: ListState keeps a bounded newest-first buffer") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[UserEvent]
-      val q = StreamJobs.recentValuesTws(mem.toDS(), k = 3)
-        .writeStream.format("memory").queryName("recent_tws")
-        .outputMode("update").start()
-      mem.addData(UserEvent(1, 1.0), UserEvent(1, 2.0))
-      q.processAllAvailable()
-      mem.addData(UserEvent(1, 3.0), UserEvent(1, 4.0))
-      q.processAllAvailable(); q.stop()
-      // after 4 appends with k=3: newest-first [4,3,2], total 4
-      val last = spark.table("recent_tws")
-        .as[(Long, Seq[Double], Long)].collect()
-        .filter(_._3 == 4L)
-      assert(last.toSeq == Seq((1L, Seq(4.0, 3.0, 2.0), 4L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("streamingNetFlow: stateful lag matches batch EnrichJob across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val b1 = Seq(
-      StatusRow("A", 5, ts("2024-01-01 10:00:00"), 1),
-      StatusRow("A", 3, ts("2024-01-01 10:05:00"), 2),
-      StatusRow("B", 7, ts("2024-01-01 10:00:00"), 3))
-    val b2 = Seq(
-      StatusRow("A", 6, ts("2024-01-01 10:10:00"), 4),
-      StatusRow("B", 2, ts("2024-01-01 10:05:00"), 5))
-    val mem = MemoryStream[StatusRow]
-    val q = StreamJobs.streamingNetFlow(mem.toDS())
-      .writeStream.format("memory").queryName("netflow")
-      .outputMode("append").start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("netflow")
-      .select("station_code", "seq", "net_flow")
-      .as[(String, Long, Option[Int])].collect().toSet
-    // batch twin over the union of both batches
-    val batchDf = (b1 ++ b2).toDF()
-      .withColumnRenamed("station_code", "sc")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sc")).orderBy(col("last_reported"), col("seq"))
-    val batch = batchDf
-      .withColumn("net_flow",
-        col("bikes_available") - lag(col("bikes_available"), 1).over(w))
-      .select(col("sc"), col("seq"), col("net_flow"))
-      .as[(String, Long, Option[Int])].collect().toSet
-    assert(streamed == batch)
-    assert(streamed == Set(("A", 1L, None), ("A", 2L, Some(-2)),
-      ("A", 4L, Some(3)), ("B", 3L, None), ("B", 5L, Some(-5))))
-  }
-
-  test("goldRefresh: foreachBatch rewrites the gold snapshot from silver") {
-    val dir = Files.createTempDirectory("graft_gold").toFile.getAbsolutePath
-    val silver = s"$dir/silver"; val gold = s"$dir/gold"; val cp = s"$dir/cp"
-    rows.toDF().write.parquet(silver)
-    StreamJobs.goldRefresh(spark, silver, gold, cp,
-      s => s.groupBy("user_id").agg(max("value").as("max_value")))
-    val got = spark.read.parquet(gold).orderBy("user_id")
-      .as[(Long, Double)].collect().toSeq
-    assert(got == Seq((1L, 5.0), (2L, 4.0)))
-    // new silver data -> next drain refreshes the snapshot
-    Seq(Ev(9, ts("2024-01-01 13:00:00"), 2, "b", 9.5)).toDF()
-      .write.mode("append").parquet(silver)
-    StreamJobs.goldRefresh(spark, silver, gold, cp,
-      s => s.groupBy("user_id").agg(max("value").as("max_value")))
-    val got2 = spark.read.parquet(gold).orderBy("user_id")
-      .as[(Long, Double)].collect().toSeq
-    assert(got2 == Seq((1L, 5.0), (2L, 9.5)))
-  }
-
   test("runStream: AvailableNow drains all files once; checkpoint restart is exactly-once") {
     val dir = Files.createTempDirectory("graft_stream").toFile.getAbsolutePath
     val in = s"$dir/in"; val out = s"$dir/out"; val cp = s"$dir/cp"
@@ -703,203 +92,5 @@ class StreamingSpec extends SparkTestBase {
     val n3 = SilverJob.runStream(spark, in, out, cp)
     assert(n3 == 1L)
     assert(spark.read.parquet(out).count() == 3L)
-  }
-  test("funnelTws: cross-batch progression matches the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[FunnelEvent]
-      val q = FunnelJobs.funnelTws(mem.toDS())
-        .writeStream.format("memory").queryName("funnel")
-        .outputMode("update").start()
-      val base = 1700000000000000L
-      // batch 1: user 1 views; user 2's purchase-before-anything ignored
-      mem.addData(FunnelEvent(1, "view", base),
-        FunnelEvent(2, "purchase", base))
-      q.processAllAvailable()
-      // batch 2: user 1 clicks (later); an out-of-order pair for user 3
-      // inside ONE batch (purchase row fed before its earlier view+click)
-      mem.addData(FunnelEvent(1, "click", base + 60000000L),
-        FunnelEvent(3, "purchase", base + 3000000L),
-        FunnelEvent(3, "click", base + 2000000L),
-        FunnelEvent(3, "view", base + 1000000L))
-      q.processAllAvailable()
-      // batch 3: user 1 converts; a click at the SAME instant as user
-      // 2's view must not advance past stage 1 (strictly-after)
-      mem.addData(FunnelEvent(1, "purchase", base + 120000000L),
-        FunnelEvent(2, "view", base + 5000000L),
-        FunnelEvent(2, "click", base + 5000000L))
-      q.processAllAvailable(); q.stop()
-      val fin = spark.table("funnel").as[FunnelProgress].collect()
-        .groupBy(_.user_id).view.mapValues(_.maxBy(_.stage_reached)).toMap
-      assert(fin(1L).stage_reached == 3L)
-      assert(fin(1L).t_purchase_us == base + 120000000L)
-      assert(fin(3L).stage_reached == 3L) // intra-batch disorder handled
-      assert(fin(2L).stage_reached == 1L) // same-instant click rejected
-      // streaming state == the batch operator on the union of batches
-      val dir = Files.createTempDirectory("graft_funnel_stream").toString
-      Seq(
-        (1L, 1L, "view", base), (2L, 2L, "purchase", base),
-        (3L, 1L, "click", base + 60000000L),
-        (4L, 3L, "purchase", base + 3000000L),
-        (5L, 3L, "click", base + 2000000L),
-        (6L, 3L, "view", base + 1000000L),
-        (7L, 1L, "purchase", base + 120000000L),
-        (8L, 2L, "view", base + 5000000L),
-        (9L, 2L, "click", base + 5000000L)
-      ).toDF("event_id", "user_id", "event_type", "us")
-        .withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.col("us"))).drop("us")
-        .withColumn("value", org.apache.spark.sql.functions.lit(0.0))
-        .withColumn("props", org.apache.spark.sql.functions.lit("{}"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val batch = graft.ops.RelOps.w26Funnel(spark, dir).collect()
-        .map { r =>
-          def us(c: String): Long = Option(r.getAs[java.sql.Timestamp](c))
-            .map(t => t.getTime * 1000 + (t.getNanos / 1000) % 1000)
-            .getOrElse(-1L)
-          r.getAs[Long]("user_id") ->
-            ((r.getAs[Long]("stage_reached"), us("t_view"), us("t_click"),
-              us("t_purchase")))
-        }.toMap
-      fin.foreach { case (u, p) =>
-        assert(batch(u) == ((p.stage_reached, p.t_view_us, p.t_click_us,
-          p.t_purchase_us)), s"user $u streaming/batch divergence")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("rollingActiveTws: accumulated deltas fold to EXACTLY the batch " +
-      "w35 board (r8 VERDICT item 6)") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val evs = Tables.events(spark, sf0001)
-        .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-            .cast("int").as("epoch_day"))
-        .as[ActiveEvent].collect()
-      // two micro-batches with overlapping users/days: re-sent activity
-      // must emit nothing the second time
-      val (b1, b2) = evs.splitAt(evs.length / 2)
-      val mem = MemoryStream[ActiveEvent]
-      val q = RollingJobs.rollingActiveTws(mem.toDS())
-        .writeStream.format("memory").queryName("active_deltas")
-        .outputMode("update").start()
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable(); q.stop()
-      val deltas = spark.table("active_deltas")
-      // processor contract: one delta per (user, day, kind), ever
-      assert(deltas.groupBy("user_id", "epoch_day", "kind").count()
-        .filter(col("count") > 1).count() == 0L)
-      val board = RollingJobs.rollingActiveBoard(deltas).collect()
-        .map(r => (r.getAs[java.sql.Date]("day").toString,
-          r.getAs[Long]("dau"), r.getAs[Long]("wau7"),
-          Option(r.getAs[Any]("stickiness")))).toSeq
-      val batch = graft.ops.RelOps.w35RollingActive(spark, sf0001).collect()
-        .map(r => (r.getAs[java.sql.Date]("day").toString,
-          r.getAs[Long]("dau"), r.getAs[Long]("wau7"),
-          Option(r.getAs[Any]("stickiness")))).toSeq
-      assert(board == batch,
-        s"streaming board != batch w35 (board ${board.size} rows, " +
-          s"batch ${batch.size})")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("streaming tumbling counts feed the exact w42 EWMA board " +
-      "(lakehouse-as-accumulator)") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val evs = Tables.events(spark, sf0001)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev].collect()
-    val (b1, b2) = evs.splitAt(evs.length / 2)
-    val mem = MemoryStream[Ev]
-    val q = StreamJobs.tumblingCounts(mem.toDF())
-      .writeStream.format("memory").queryName("ewma_cells")
-      .outputMode("complete").start()
-    mem.addData(b1.toIndexedSeq)
-    q.processAllAvailable()
-    mem.addData(b2.toIndexedSeq)
-    q.processAllAvailable(); q.stop()
-    // the accumulated tumbling-count table IS the cells frame; spine +
-    // EWMA are the same batch finisher w42 uses
-    val cells = spark.table("ewma_cells")
-      .select(col("event_type"), col("bucket_start").as("h"),
-        col("n").as("x"))
-    val board = graft.ops.RelOps.ewmaOfCells(
-        graft.ops.RelOps.spineFillCells(cells))
-      .collect().map(_.toSeq).toSeq
-    val batch = graft.ops.RelOps.w42Ewma(spark, sf0001)
-      .collect().map(_.toSeq).toSeq
-    assert(board == batch,
-      s"streaming-accumulated EWMA board != batch w42 " +
-        s"(${board.size} vs ${batch.size} rows)")
-    graft.Caches.unpersistAll()
-  }
-
-  test("attributionTws: accumulated per-purchase credits fold to EXACTLY " +
-      "the batch w44 report") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      // event-time order across batches: the processor's documented
-      // in-order contract (within a batch it sorts for itself)
-      val evs = Tables.events(spark, sf0001)
-        .select(col("event_id"), unix_micros(col("ts")).as("um"),
-          col("user_id"), col("event_type"))
-        .as[AttrEvent].collect().sortBy(e => (e.um, e.event_id))
-      // split mid-stream: purchases in batch 2 must still see batch-1
-      // touches through the carried ListState
-      val (b1, b2) = evs.splitAt(evs.length / 2)
-      val mem = MemoryStream[AttrEvent]
-      val q = AttributionJobs.attributionTws(mem.toDS())
-        .writeStream.format("memory").queryName("attr_results")
-        .outputMode("update").start()
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable(); q.stop()
-      val results = spark.table("attr_results")
-      // one credit row per purchase, ever
-      val nPurchases = evs.count(_.event_type == "purchase").toLong
-      assert(results.count() == nPurchases)
-      assert(results.select("purchase_id").distinct().count() == nPurchases)
-      val board = AttributionJobs.attributionBoard(results)
-        .collect().map(_.toSeq).toSeq
-      val batch = graft.ops.RelOps.w44Attribution(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      assert(board == batch,
-        s"streaming attribution board != batch w44 " +
-          s"(${board.size} vs ${batch.size} rows)")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      graft.Caches.unpersistAll()
-    }
   }
 }
