@@ -2,10 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Write-once scratch materialization of small derived tables — the
-  * pairGraph/madStats discipline (build a tiny shared intermediate once
-  * per dataset dir per JVM, every consumer scans the parquet) factored
-  * into one place, with the two lifecycle guarantees the inline
+/** Write-once scratch materialization of small derived tables — build
+  * a shared intermediate once per dataset dir per JVM, every consumer
+  * scans the parquet. This is the ONLY write-once table path: the LSH
+  * band table and pair graph (DedupOps), the IVF codebook and postings
+  * (SimOps), p16's history partials and the release manifests
+  * (PipelineOps), and RelOps' madstats/gapstats/convlat/rfmcuts all
+  * go through [[table]], one key per table; a build that reads another
+  * write-once table calls its accessor, so the dependency is built
+  * first. It carries the two lifecycle guarantees the earlier inline
   * versions lacked (ADVICE r9):
   *
   *  - INVALIDATION: entries are keyed on (logical key, dataset-dir

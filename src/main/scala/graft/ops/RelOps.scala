@@ -532,7 +532,7 @@ object RelOps {
     sortTiny(madStats(spark, dir), "event_type")
 
   // Write-once MAD-stats materialization, the pairGraph discipline
-  // (DedupOps.materializedRoot) applied to the w23/w29 common prefix:
+  // (DedupOps.pairGraph) applied to the w23/w29 common prefix:
   // both queries need the SAME G-row (event_type, median_value, mad,
   // n) table, and the two-phase rank machinery that derives it costs
   // ~2s of fixed plan/stage overhead per execution (measured
@@ -541,7 +541,6 @@ object RelOps {
   // fingerprint moves — the ADVICE r9 staleness fix, via Materialized);
   // every consumer scans the G-row parquet. Values are identical by
   // construction (the build IS madOf), so oracle hashes are untouched.
-  private[graft] def madBuildCount = graft.Materialized.buildCount
 
   /** The raw (unmaterialized) madstats build plan — exposed so
     * PlanAuditSpec can audit the write-once build the query sweep never
@@ -879,9 +878,10 @@ object RelOps {
     * hour's latest reading (ties totally ordered by (ts desc, event_id
     * desc)); empty hours are materialized with n_events = 0 and the
     * previous reading carried forward — the time-series repair step in
-    * front of any fixed-cadence model (and the batch twin of E114's
-    * trailing-window state). `value` is a pure pass-through double: no
-    * arithmetic touches it, so LOCF is bit-identical across engines.
+    * front of any fixed-cadence model (the batch form of a streaming
+    * job's trailing-window state). `value` is a pure pass-through
+    * double: no arithmetic touches it, so LOCF is bit-identical across
+    * engines.
     *
     * 100 TB posture: the spine is sequence()-generated per key (rows
     * bounded by span/cadence, never a calendar cross join), the
@@ -1192,10 +1192,12 @@ object RelOps {
 
   /** w54's body over any (stream, seq_column, ts_column, frame with
     * (seq, tus)) registry — exposed for the planted-disorder spec.
-    * `seq` must be unique per stream (it IS the ingest order).
+    * `seq` must be unique per stream (it IS the ingest order). `width`
+    * is the seq-bucket width (see below); the spec passes a prime one.
     */
   private[graft] def outOfOrderOf(
-      streams: Seq[(String, String, String, DataFrame)]): DataFrame = {
+      streams: Seq[(String, String, String, DataFrame)],
+      width: Long = 4096L): DataFrame = {
     val spark = streams.head._4.sparkSession
     import spark.implicits._
     // the column-name labels join back onto the |streams|-row fold —
@@ -1207,17 +1209,13 @@ object RelOps {
     // Bucket width bound (ADVICE r14): the offsets frame is
     // ceil(seq_range/width) rows per stream, and it must stay
     // broadcast-sized (phase 1's per-stream prefix window is also a
-    // single-task sort of that frame). The default 4096 keeps offsets
-    // under ~2.5e5 rows per 1e9-row stream; past ~1e12 rows/stream the
-    // frame outgrows broadcast/driver limits, so deployments set
-    // `graft.w54.bucketWidth` ~ seq_range/2^20 (e.g. 2^24 buckets a
-    // 1.7e13-seq stream into 1M offset rows). The statistic is
-    // width-invariant: buckets partition the seq order, so any width
-    // reproduces the single declarative window bit-for-bit (the
-    // planted-disorder spec pins 4096 vs a prime width equal).
-    val width = math.max(1L,
-      spark.conf.getOption("graft.w54.bucketWidth")
-        .flatMap(w => scala.util.Try(w.toLong).toOption).getOrElse(4096L))
+    // single-task sort of that frame). Width 4096 keeps offsets under
+    // ~2.5e5 rows per 1e9-row stream; past ~1e12 rows/stream the frame
+    // outgrows broadcast/driver limits and the width must grow to
+    // ~seq_range/2^20. The statistic is width-invariant: buckets
+    // partition the seq order, so any width reproduces the single
+    // declarative window bit-for-bit (the planted-disorder spec pins
+    // 4096 vs a prime width equal).
     val s = streams.map { case (st, _, _, df) =>
       df.select(lit(st).as("stream"), col("seq"), col("tus"))
     }.reduce(_.unionAll(_))

@@ -1149,34 +1149,42 @@ object SimOps {
   }
 
   // ---------------------------------------------------------------------
-  // s19: write-once IVF index (codebook + postings) per dataset dir —
-  // the vector-side twin of DedupOps.materializedRoot. In production
-  // this is the persisted index a vector store maintains; here it is
-  // session-scoped scratch parquet, built from the CORPUS slice only
+  // s19: write-once IVF index per dataset dir — the codebook and the
+  // postings are two `graft.Materialized` tables, the vector-side twin
+  // of DedupOps' band table and pair graph. The postings build reads
+  // the materialized codebook, so the codebook is always built first.
+  // In production this is the persisted index a vector store
+  // maintains; both are built from the CORPUS slice only
   // (vec_id % 10 != 7 — the % 10 = 7 slice is "today's batch").
   // ---------------------------------------------------------------------
 
-  private val ivfRoots = scala.collection.mutable.Map.empty[String, String]
-  private lazy val ivfScratch: String =
-    java.nio.file.Files.createTempDirectory("graft-ivfindex-").toString
-  // Build counter, exposed for the build-once spec.
-  private[graft] var ivfBuildCount = 0
+  private def ivfCorpus(spark: SparkSession, dir: String): DataFrame =
+    graft.Caches.cache(vectors(spark, dir).filter(col("vec_id") % 10 =!= 7))
 
-  private[graft] def ivfIndexRoot(
-      spark: SparkSession, dir: String): String = synchronized {
-    ivfRoots.getOrElseUpdate(dir, {
-      ivfBuildCount += 1
-      val root = s"$ivfScratch/${ivfRoots.size}"
-      val corpus = graft.Caches.cache(
-        vectors(spark, dir).filter(col("vec_id") % 10 =!= 7))
-      cellCentroids(corpus).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/codebook")
-      val codebook = spark.read.parquet(s"$root/codebook")
-      assignCells(scoreCells(corpus, codebook)).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/postings")
-      root
-    })
-  }
+  /** The raw (unmaterialized) IVF codebook build — exposed so
+    * PlanAuditSpec can audit the write-once build the query sweep never
+    * sees.
+    */
+  private[graft] def ivfCodebookBuild(
+      spark: SparkSession, dir: String): DataFrame =
+    cellCentroids(ivfCorpus(spark, dir))
+
+  /** The raw IVF postings build: the corpus scored against the
+    * materialized codebook (a broadcast scan).
+    */
+  private[graft] def ivfPostingsBuild(
+      spark: SparkSession, dir: String): DataFrame =
+    assignCells(scoreCells(ivfCorpus(spark, dir), ivfCodebook(spark, dir)))
+
+  /** The materialized (cell, cvec, cnorm) IVF codebook for `dir`. */
+  private def ivfCodebook(spark: SparkSession, dir: String): DataFrame =
+    graft.Materialized.table(spark, s"ivf_codebook:$dir", dir)(
+      ivfCodebookBuild(spark, dir))
+
+  /** The materialized (vec_id, cell) IVF postings for `dir`. */
+  private def ivfPostings(spark: SparkSession, dir: String): DataFrame =
+    graft.Materialized.table(spark, s"ivf_postings:$dir", dir)(
+      ivfPostingsBuild(spark, dir))
 
   /** Incremental ANN index maintenance (the d09 posture for vectors —
     * what a vector store does on a daily embedding batch): assign the
@@ -1198,9 +1206,8 @@ object SimOps {
     * exact.
     */
   def s19IvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val root = ivfIndexRoot(spark, dir)
-    val codebook = spark.read.parquet(s"$root/codebook")
-    val postings = spark.read.parquet(s"$root/postings")
+    val codebook = ivfCodebook(spark, dir)
+    val postings = ivfPostings(spark, dir)
     val batch = vectors(spark, dir).filter(col("vec_id") % 10 === 7)
     val asg = assignCells(scoreCells(batch, codebook))
     val before = postings.groupBy("cell").agg(count(lit(1)).as("n_before"))
@@ -1238,8 +1245,7 @@ object SimOps {
     * predicate shape).
     */
   def s25TombstoneCompact(spark: SparkSession, dir: String): DataFrame = {
-    val root = ivfIndexRoot(spark, dir)
-    tombstoneCompactOf(spark.read.parquet(s"$root/postings"),
+    tombstoneCompactOf(ivfPostings(spark, dir),
       col("vec_id") % 10 === 4)
   }
 
@@ -1867,10 +1873,8 @@ object SimOps {
     * and the 1-row totals ride the d23 scalar broadcast.
     */
   def s30CellBalance(spark: SparkSession, dir: String): DataFrame = {
-    val root = ivfIndexRoot(spark, dir)
-    cellBalanceOf(
-      spark.read.parquet(s"$root/codebook").select("cell"),
-      spark.read.parquet(s"$root/postings"))
+    cellBalanceOf(ivfCodebook(spark, dir).select("cell"),
+      ivfPostings(spark, dir))
   }
 
   /** The s30 body over any codebook spine × postings pair — exposed so

@@ -28,6 +28,14 @@ object TextOps {
   private def sqlMarkerCount(markers: Seq[String]): String =
     s"len(list_filter(t, x -> x IN (${markers.map("'" + _ + "'").mkString(",")})))"
 
+  /** floor(log2(c)) for c >= 1 — the binary-digit count minus one, the
+    * exact integer bit bucket of the surprisal family (t08, t09, t10,
+    * t27, t28); the oracle SQL spells it
+    * `length(format('{:b}', c)) - 1`.
+    */
+  private def bits(c: Column): Column =
+    (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
+
   /** Token counting: whitespace tokens, word-regex tokens, BPE-ish subword
     * segments, CJK chars. Regexes restricted to the common Java/RE2 subset
     * (no lookaround) so the oracle is dialect-identical.
@@ -218,8 +226,6 @@ object TextOps {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
     val cf = tok.groupBy("token").agg(count(lit(1)).as("cf"))
     val total = cf.agg(sum(col("cf")).as("n_total"))
-    def bits(c: Column): Column =
-      (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
     val perDoc = tok.join(cf, Seq("token"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
@@ -265,8 +271,6 @@ object TextOps {
       .withColumn("offset", coalesce(sum(col("n_toks")).over(wh), lit(0L)))
       .select("cf", "offset")
     val wr = Window.partitionBy(col("cf")).orderBy(col("token"))
-    def bits(c: Column): Column =
-      (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
     val ranked = cf.join(broadcast(off), Seq("cf"))
       .withColumn("rank", col("offset") + row_number().over(wr))
       .select(bits(col("rank")).as("x"), bits(col("cf")).as("y"),
@@ -326,8 +330,6 @@ object TextOps {
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(pairs)).as("bigram"))
       .repartition(col("bigram")))
-    def bits(c: Column): Column =
-      (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
     // bits() is string work (decimal -> binary digits) — computed ONCE
     // per distinct token/bigram on the O(vocab)-sized frequency tables,
     // never on the corpus-sized instance join.
@@ -688,13 +690,14 @@ object TextOps {
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val nDocs = cached.agg(count(lit(1)).as("n_docs"))
-    def bits(c: Column): Column =
+    def bitLength(c: Column): Column =
       length(conv(c.cast("string"), 10, 2)).cast("long")
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token").asc)
     tf.join(df, Seq("token"))
       .crossJoin(broadcast(nDocs))
-      .withColumn("score", col("tf") * (bits(col("n_docs")) - bits(col("df"))))
+      .withColumn("score",
+        col("tf") * (bitLength(col("n_docs")) - bitLength(col("df"))))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
       .select(col("doc_id"), col("rank"), col("token"), col("tf"),
@@ -1025,8 +1028,6 @@ object TextOps {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
     val cf = tok.groupBy("token").agg(count(lit(1)).as("cf"))
     val total = cf.agg(sum(col("cf")).as("n_total"))
-    def bits(c: Column): Column =
-      (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
     val perDoc = tok.join(cf, Seq("token"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
@@ -1098,8 +1099,6 @@ object TextOps {
     val bc = tok.groupBy("bucket")
       .agg(count(lit(1)).as("cr"),
         sum(when(col("lang") === "de", 1L).otherwise(0L)).as("ct"))
-    def bits(c: Column): Column =
-      (length(conv(c.cast("string"), 10, 2)) - 1).cast("long")
     // the per-token normalization constant log(Nr/Nt) in the same
     // bit-bucket arithmetic: Nr = corpus tokens, Nt = target tokens
     // (1-row frame off the 1024-row bucket counts — broadcast scalar)

@@ -33,9 +33,9 @@ class AggMergeSpec extends SparkTestBase {
 
   test("p16: history partials build once per dir (delta-only rescans)") {
     PipelineOps.p16AggMerge(spark, sf0001).collect()
-    val after = PipelineOps.aggStateBuildCount
+    val after = graft.Materialized.buildCount
     PipelineOps.p16AggMerge(spark, sf0001).collect()
     PipelineOps.p16AggMerge(spark, sf0001).collect()
-    assert(PipelineOps.aggStateBuildCount == after)
+    assert(graft.Materialized.buildCount == after)
   }
 }

@@ -40,9 +40,9 @@ class IvfAppendSpec extends SparkTestBase {
 
   test("s19: index builds once per dataset dir (the materialized-root discipline)") {
     SimOps.s19IvfAppend(spark, sf0001).count()
-    val builds = SimOps.ivfBuildCount
+    val builds = graft.Materialized.buildCount
     SimOps.s19IvfAppend(spark, sf0001).count()
-    assert(SimOps.ivfBuildCount == builds,
+    assert(graft.Materialized.buildCount == builds,
       "second invocation rebuilt the persisted index")
   }
 

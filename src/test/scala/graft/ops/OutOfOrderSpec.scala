@@ -54,21 +54,17 @@ class OutOfOrderSpec extends SparkTestBase {
     graft.Caches.unpersistAll()
   }
 
-  test("w54: the statistic is bucket-width-invariant — a prime width " +
-      "set via graft.w54.bucketWidth reproduces the default's rows") {
-    // ADVICE r14: the width is the deployment's broadcast-size lever,
-    // so it must never change the answer. Prime width 7 forces many
-    // boundary crossings on the same boundary-straddling stream.
+  test("w54: a prime bucket width reproduces the 4096 width's rows") {
+    // ADVICE r14: the width is the broadcast-size lever, so it must
+    // never change the answer. Prime width 7 forces many boundary
+    // crossings on the same boundary-straddling stream.
     val data = Seq((0L, 100L), (10L, 40L), (5000L, 50L), (9000L, 60L),
       (13000L, 200L), (13001L, 150L))
-    def run() = RelOps.outOfOrderOf(Seq(
-        ("x", "seq", "tus", data.toDF("seq", "tus"))))
+    def run(width: Long) = RelOps.outOfOrderOf(Seq(
+        ("x", "seq", "tus", data.toDF("seq", "tus"))), width)
       .as[(String, String, String, Long, Long, Double, Long)]
       .collect().toSeq
-    val byDefault = run()
-    spark.conf.set("graft.w54.bucketWidth", "7")
-    try assert(run() == byDefault, "prime width diverged from default")
-    finally spark.conf.unset("graft.w54.bucketWidth")
+    assert(run(7L) == run(4096L), "prime width diverged from default")
     graft.Caches.unpersistAll()
   }
 

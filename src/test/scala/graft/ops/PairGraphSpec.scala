@@ -18,29 +18,34 @@ class PairGraphSpec extends SparkTestBase {
     */
   private def plant(docs: Seq[(Long, String)], tag: String): String = {
     val dir = Files.createTempDirectory(s"graft_pg_$tag").toString
+    writeDocs(dir, docs)
+    dir
+  }
+
+  /** (Re)write `dir`'s `documents.parquet` from a (doc_id, text) corpus. */
+  private def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit =
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("planted"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
 
   private def word(i: Int): String = f"tok$i%04d"
 
+  private val shared = (0 until 80).map(word).mkString(" ")
+  private val fillers = (10L to 29L).map(i =>
+    i -> (200 until 280).map(j => word((j * (i.toInt + 7)) % 9973)).mkString(" "))
+
   /** A corpus with one exact near-dup pair (1,2) and filler docs. */
-  private lazy val pairDir: String = {
-    val shared = (0 until 80).map(word).mkString(" ")
-    val fillers = (10L to 29L).map(i =>
-      i -> (200 until 280).map(j => word((j * (i.toInt + 7)) % 9973)).mkString(" "))
+  private lazy val pairDir: String =
     plant(Seq(1L -> shared, 2L -> shared) ++ fillers, "pair")
-  }
 
   test("pair graph: built once per dir, every further consumer scans it") {
-    val before = DedupOps.buildCount
+    val before = graft.Materialized.buildCount
     val d03a = DedupOps.d03LshNearDup(spark, pairDir).collect()
-    val afterFirst = DedupOps.buildCount
-    assert(afterFirst == before + 1)
+    val afterFirst = graft.Materialized.buildCount
+    // two write-once tables: the band table, then the pair graph
+    assert(afterFirst == before + 2)
     // planted near-dup pair present with J = 1.0
     assert(d03a.exists(r => r.getAs[Long]("doc_a") == 1L &&
       r.getAs[Long]("doc_b") == 2L && r.getAs[Double]("jaccard") == 1.0))
@@ -49,7 +54,21 @@ class PairGraphSpec extends SparkTestBase {
     DedupOps.d07NeardupComponents(spark, pairDir).collect()
     DedupOps.d11DedupPipeline(spark, pairDir).collect()
     DedupOps.d17StarComponents(spark, pairDir).collect()
-    assert(DedupOps.buildCount == afterFirst)
+    assert(graft.Materialized.buildCount == afterFirst)
+  }
+
+  test("pair graph: rewriting documents.parquet in the same dir serves " +
+      "the new corpus's pairs, not the first build's") {
+    val other = (300 until 380).map(word).mkString(" ")
+    def pairs(dir: String) = DedupOps.d03LshNearDup(spark, dir)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val dir = plant(Seq(1L -> shared, 2L -> shared, 3L -> other) ++ fillers,
+      "stale")
+    assert(pairs(dir) == Set((1L, 2L)))
+    // same dir, same doc ids: the near-dup pair moves from (1,2) to (2,3)
+    writeDocs(dir, Seq(1L -> shared, 2L -> other, 3L -> other) ++ fillers)
+    assert(pairs(dir) == Set((2L, 3L)),
+      "served the first corpus's pair graph after documents.parquet changed")
   }
 
   test("consumer plans scan the materialized table: no Generate anywhere") {
@@ -57,21 +76,21 @@ class PairGraphSpec extends SparkTestBase {
     val d03 = DedupOps.d03LshNearDup(spark, pairDir)
     val d03Plan = d03.queryExecution.optimizedPlan.toString
     assert(d03.inputFiles.nonEmpty &&
-      d03.inputFiles.forall(_.contains("graft-pairgraph")),
+      d03.inputFiles.forall(_.contains("graft-materialized-")),
       s"d03 does not scan the materialized pair graph: ${d03.inputFiles.toSeq}")
     assert(!d03Plan.contains("Generate"),
       s"d03 plan still contains an explode:\n$d03Plan")
     val q23 = graft.ops.CoreOps.q23Reachability(spark, pairDir)
     val q23Plan = q23.queryExecution.optimizedPlan.toString
     assert(q23.inputFiles.nonEmpty &&
-      q23.inputFiles.forall(_.contains("graft-pairgraph")),
+      q23.inputFiles.forall(_.contains("graft-materialized-")),
       s"q23 does not scan the materialized pair graph: ${q23.inputFiles.toSeq}")
     assert(!q23Plan.contains("Generate"),
       s"q23 plan still contains an explode:\n$q23Plan")
     // d16's near channel likewise scans the table (its exact channel
     // legitimately explodes nothing either — no Generate at all)
     val d16 = DedupOps.d16CorpusDiff(spark, pairDir)
-    assert(d16.inputFiles.exists(_.contains("graft-pairgraph")),
+    assert(d16.inputFiles.exists(_.contains("graft-materialized-")),
       s"d16 does not scan the materialized pair graph: ${d16.inputFiles.toSeq}")
     assert(!d16.queryExecution.optimizedPlan.toString.contains("Generate"),
       "d16 plan contains an explode")

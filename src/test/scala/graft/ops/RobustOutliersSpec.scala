@@ -54,14 +54,14 @@ class RobustOutliersSpec extends SparkTestBase {
 
   test("mad stats materialize once per dir and w23 == the build (r8 " +
       "VERDICT item 4: the pairGraph discipline on the w23/w29 prefix)") {
-    val before = RelOps.madBuildCount
+    val before = graft.Materialized.buildCount
     val viaStats = RelOps.w23Mad(spark, sf0001).collect().toSeq
     RelOps.w29RobustOutliers(spark, sf0001).count()
     RelOps.w23Mad(spark, sf0001).count()
     // at most one build for this dir across all three consumers (0 if
     // an earlier test in this JVM already built it)
-    assert(RelOps.madBuildCount - before <= 1,
-      s"rebuilt per consumer: ${RelOps.madBuildCount - before}")
+    assert(graft.Materialized.buildCount - before <= 1,
+      s"rebuilt per consumer: ${graft.Materialized.buildCount - before}")
     // and the materialized values ARE madOf's output, bit-for-bit
     val direct = RelOps.madOf(
       graft.Tables.events(spark, sf0001).select("event_type", "value"))

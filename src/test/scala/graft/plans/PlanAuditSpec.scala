@@ -99,13 +99,22 @@ class PlanAuditSpec extends SparkTestBase {
       "build:madstats" -> (graft.ops.RelOps.madStatsBuild _),
       "build:rfmcuts" -> (graft.ops.RelOps.rfmCutsBuild _),
       "build:gapstats" -> (graft.ops.RelOps.gapStatsBuild _),
-      "build:convlat" -> (graft.ops.RelOps.convLatencyBuild _))
+      "build:convlat" -> (graft.ops.RelOps.convLatencyBuild _),
+      "build:bands" -> (graft.ops.DedupOps.bandsBuild _),
+      "build:pairs" -> (graft.ops.DedupOps.pairsBuild _),
+      "build:ivf_codebook" -> (graft.ops.SimOps.ivfCodebookBuild _),
+      "build:ivf_postings" -> (graft.ops.SimOps.ivfPostingsBuild _),
+      "build:aggstate" -> (graft.ops.PipelineOps.aggStateBuild _))
     // rfmcuts: the w49 1-row global-max-date scalar broadcast (the d23
     // pattern, already documented on w49's own allowlist entry) sits in
     // the BUILD (recency needs the corpus max date before the cuts
-    // exist). Exact-match, so a stale entry fails like the main sweep.
+    // exist). ivf_postings: every corpus vector scored against the
+    // broadcast L-row codebook (s19's documented broadcast scan; Bench
+    // credits this build to s19, see NOTES.md "Write-once tables").
+    // Exact-match, so a stale entry fails like the main sweep.
     val buildAllow = Map(
-      "build:rfmcuts" -> Set("BroadcastNestedLoopJoin"))
+      "build:rfmcuts" -> Set("BroadcastNestedLoopJoin"),
+      "build:ivf_postings" -> Set("BroadcastNestedLoopJoin"))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val structural = builds.map { case (n, fn) =>
