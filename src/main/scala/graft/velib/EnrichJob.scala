@@ -1,9 +1,9 @@
 package graft.velib
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, ShortType}
 
 /** The latent `velib_stats_history_silver` asset (SURVEY.md §1.4): the
   * reference depends on it by name (`src/assets/velib_alerte.py:17`) but its
@@ -16,32 +16,50 @@ import org.apache.spark.sql.types.DecimalType
   *                       ordered by last_reported  (W3)
   *   - `moving_avg_1h` = trailing-1h mean of bikes_available per station
   *                       (W4, RANGE frame over event-time)
+  *   - `baseline_avg`  = running mean of bikes_available per station
   *   - `date`          = to_date(last_reported)    (partition column)
   *
-  * Scale notes: both windows share ONE partitioning (station_code), so the
-  * whole enrichment costs a single hash shuffle + per-partition sort; at
-  * 100 TB the station key is high-cardinality and un-skewed (each station
-  * contributes one reading per tick), so no salting is needed.
+  * Scale notes: every window partitions by station_code, so the whole
+  * enrichment costs a single hash shuffle and ONE per-partition sort. The
+  * lag orders by `(unix_micros(last_reported), tiebreak)`, the same row
+  * order as `(last_reported, tiebreak)` (micros are the timestamp's own
+  * precision), and the two RANGE frames order by `unix_micros` alone, a
+  * prefix of it, so the lag's sort also satisfies the RANGE window above
+  * it. At 100 TB the station key is high-cardinality and un-skewed (each
+  * station contributes one reading per tick), so no salting is needed.
   */
 object EnrichJob {
 
-  /** Deterministic trailing mean: exact decimal sum, then one double
-    * division — bit-identical across engines regardless of addition order.
+  /** Deterministic trailing mean: an exact sum, then one double division,
+    * so the result is bit-identical across engines regardless of addition
+    * order. Byte, short and int input sums as a primitive long: with
+    * fewer than 2^32 rows in a frame the sum stays below 2^63 in
+    * magnitude, so it is the exact integer, and its cast to double rounds
+    * to the same double as the `DECIMAL(28,6)` sum of the oracle SQL does.
+    * Any other type (long, which could overflow and throw under ANSI where
+    * the decimal sum does not, and double) sums as `DECIMAL(28,6)`.
     */
-  private def exactAvg(c: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    sum(c.cast(DecimalType(28, 6))).over(w).cast("double") / count(c).over(w)
+  private def exactAvg(c: Column, t: DataType, w: WindowSpec): Column = {
+    val exact = t match {
+      case ByteType | ShortType | IntegerType => c.cast("long")
+      case _ => c.cast(DecimalType(28, 6))
+    }
+    sum(exact).over(w).cast("double") / count(c).over(w)
+  }
 
   def enrich(silver: DataFrame, tiebreak: Column): DataFrame = {
     val byStation = Window.partitionBy(col("station_code"))
-    val ordered = byStation.orderBy(col("last_reported"), tiebreak)
     // RANGE frame over microsecond event-time: 1h = 3.6e9 us. Micros (not a
     // seconds cast) so the frame boundary is exact at any timestamp precision.
-    val byMicros = byStation.orderBy(unix_micros(col("last_reported")))
+    val micros = unix_micros(col("last_reported"))
+    val ordered = byStation.orderBy(micros, tiebreak)
+    val byMicros = byStation.orderBy(micros)
     val lastHour = byMicros.rangeBetween(-3600L * 1000000L, 0L)
     // Running per-station mean: the scale-free baseline the alert rules can
     // compare against (a trailing-1h mean degenerates to a single reading
     // when the feed is sparse).
     val allSoFar = byMicros.rangeBetween(Window.unboundedPreceding, 0L)
+    val bikesT = silver.schema("bikes_available").dataType
     // one select, not chained withColumns: interleaved Projects would
     // break CollapseWindow adjacency, leaving the two micros-ordered
     // RANGE windows in separate Window execs with a redundant sort each
@@ -49,8 +67,8 @@ object EnrichJob {
       col("*"),
       (col("bikes_available") - lag(col("bikes_available"), 1).over(ordered))
         .as("net_flow"),
-      exactAvg(col("bikes_available"), lastHour).as("moving_avg_1h"),
-      exactAvg(col("bikes_available"), allSoFar).as("baseline_avg"),
+      exactAvg(col("bikes_available"), bikesT, lastHour).as("moving_avg_1h"),
+      exactAvg(col("bikes_available"), bikesT, allSoFar).as("baseline_avg"),
       to_date(col("last_reported")).as("date"))
   }
 

@@ -64,7 +64,7 @@ object Pipeline {
     *
     *   - `n` / `sum_bikes`: the running count/sum behind baseline_avg
     *     (integer-exact, so `sum/n` in double is bit-identical to the
-    *     batch recompute's decimal-sum exactAvg);
+    *     batch recompute's exact-sum `EnrichJob.exactAvg`);
     *   - `readings`: the station's trailing-1h readings plus its top-2
     *     by (ts, seq) — exactly what trend (lag) and moving_avg_1h
     *     (inclusive 1h RANGE frame) need; everything older can never
@@ -197,6 +197,13 @@ object Pipeline {
     * `root`: silver/ (append, partitioned by date), gold/ (snapshot),
     * serving/ (snapshot). Checkpointed: a re-drain with no new files
     * rewrites nothing. Returns rows ingested this invocation.
+    *
+    * Gold is written as one file through `repartition(1)`, a 1-partition
+    * shuffle. A `coalesce(1)` there would be a narrow dependency: it pulls
+    * the whole upstream stage (enrichment windows, W1 dedup) into the one
+    * task that writes the file, so the history scan would run on a
+    * single core. Behind the shuffle that stage keeps its partitions and
+    * only the (at most one row per station) gold rows meet in one task.
     */
   def runEndToEnd(spark: SparkSession, inputDir: String, root: String): Long = {
     val silverPath = s"$root/silver"
@@ -204,12 +211,14 @@ object Pipeline {
     val writer = SilverJob.parseRaw(raw).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").partitionBy("date").parquet(silverPath)
-        val enriched = EnrichJob.enrich(
-          canonical(spark.read.parquet(silverPath)), col("seq"))
+        // known schemas: a bare parquet read runs a footer-reading job
+        val enriched = EnrichJob.enrich(canonical(
+          spark.read.schema(batch.schema).parquet(silverPath)), col("seq"))
         val gold = GoldAlerts.alerts(enriched, col("seq"))
-        gold.coalesce(1).write.mode("overwrite").parquet(s"$root/gold")
+        gold.repartition(1).write.mode("overwrite").parquet(s"$root/gold")
         Serving.criticalAlerts(
-            spark.read.parquet(s"$root/gold"), enriched, col("seq"))
+            spark.read.schema(gold.schema).parquet(s"$root/gold"),
+            enriched, col("seq"))
           .coalesce(1).write.mode("overwrite").parquet(s"$root/serving")
         graft.Caches.unpersistAll() // serving's intra-query target cache
         ()

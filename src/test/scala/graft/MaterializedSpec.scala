@@ -15,7 +15,7 @@ class MaterializedSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshDir(): String = {
-    val d = Files.createTempDirectory("graft-mat-spec-").toString
+    val d = tempDir("mat_spec_").toString
     d
   }
 

@@ -191,6 +191,94 @@ object SparkWindowProps extends Properties("spark-windows") {
       got == want
     }
 
+  // per-station feeds: equal timestamps (10-min grid, a 1h frame edge
+  // on the grid, an occasional 1us offset), exact re-sends (a row
+  // repeated verbatim, seq included) and values of one sign per station,
+  // up to Int.MinValue / Int.MaxValue, so net_flow cannot overflow
+  private val feedGen: Gen[List[(String, Option[Int], Long, Long)]] =
+    Gen.chooseNum(1, 40).flatMap { n =>
+      Gen.listOfN(n, for {
+        key <- Gen.oneOf("A", "B", "C")
+        slot <- Gen.chooseNum(0, 12)
+        nudge <- Gen.frequency(4 -> Gen.const(0L), 1 -> Gen.const(1L))
+        mag <- Gen.frequency(2 -> Gen.chooseNum(0, 50),
+          2 -> Gen.chooseNum(0, Int.MaxValue),
+          1 -> Gen.oneOf(0, Int.MaxValue))
+        isNull <- Gen.frequency(9 -> false, 1 -> true)
+        resend <- Gen.frequency(4 -> false, 1 -> true)
+      } yield (key, slot * 600000000L + nudge,
+        if (isNull) None else Some(if (key == "B") -mag - 1 else mag), resend))
+    }.map { rows =>
+      rows.zipWithIndex.flatMap { case ((k, us, v, resend), i) =>
+        val row = (k, v, us, i.toLong)
+        if (resend) List(row, row) else List(row)
+      }
+    }
+
+  /** EnrichJob.enrich written out with the oracle SQL's formula: decimal
+    * sums, lag ordered by (last_reported, seq), RANGE frames on micros.
+    */
+  private def referenceEnrich(silver: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val byStation = Window.partitionBy(col("station_code"))
+    val ordered = byStation.orderBy(col("last_reported"), col("seq"))
+    val byMicros = byStation.orderBy(unix_micros(col("last_reported")))
+    def avg(w: org.apache.spark.sql.expressions.WindowSpec) =
+      sum(col("bikes_available").cast(
+          org.apache.spark.sql.types.DecimalType(28, 6)))
+        .over(w).cast("double") / count(col("bikes_available")).over(w)
+    silver.select(col("*"),
+      (col("bikes_available") - lag(col("bikes_available"), 1).over(ordered))
+        .as("net_flow"),
+      avg(byMicros.rangeBetween(-3600L * 1000000L, 0L)).as("moving_avg_1h"),
+      avg(byMicros.rangeBetween(Window.unboundedPreceding, 0L))
+        .as("baseline_avg"),
+      to_date(col("last_reported")).as("date"))
+  }
+
+  /** Rows as strings with every double by its raw bits, sorted. */
+  private def rawBits(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => s"d${java.lang.Double.doubleToRawLongBits(d)}"
+      case other => String.valueOf(other)
+    }.mkString("|")).toSeq.sorted
+
+  private def silverOf(rows: Seq[(String, Option[Any], Long, Long)],
+      valueType: String) = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val schema = StructType.fromDDL("station_code STRING, " +
+      s"bikes_available $valueType, us BIGINT, seq BIGINT")
+    val data = rows.map { case (k, v, us, q) =>
+      org.apache.spark.sql.Row(k, v.orNull, us, q) }
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+      .select(col("station_code"), col("station_code").as("station_name"),
+        col("bikes_available"), lit(0L).as("docks_available"),
+        timestamp_micros(lit(1709287200000000L) + col("us"))
+          .as("last_reported"), col("seq"))
+  }
+
+  property("EnrichJob.enrich is bit-identical to the decimal-sum chain " +
+      "on INT feeds (ties, re-sends, extremes)") =
+    Prop.forAll(feedGen) { rows =>
+      val silver = silverOf(rows, "INT")
+      rawBits(graft.velib.EnrichJob.enrich(silver,
+          org.apache.spark.sql.functions.col("seq"))) ==
+        rawBits(referenceEnrich(silver))
+    }
+
+  property("EnrichJob.enrich is bit-identical to the decimal-sum chain " +
+      "on DOUBLE feeds") =
+    Prop.forAll(feedGen, Gen.chooseNum(1, 1000000)) { (rows, scale) =>
+      // fractional values inside DECIMAL(28,6)'s range
+      val silver = silverOf(rows.map { case (k, v, us, q) =>
+        (k, v.map(_.toDouble / scale), us, q) }, "DOUBLE")
+      rawBits(graft.velib.EnrichJob.enrich(silver,
+          org.apache.spark.sql.functions.col("seq"))) ==
+        rawBits(referenceEnrich(silver))
+    }
+
   property("p04 packing: two-phase prefix sum equals the naive global scan") =
     // arbitrary token counts, arbitrary group size: shard assignment must
     // equal floor(exclusive_running_sum / budget) computed sequentially

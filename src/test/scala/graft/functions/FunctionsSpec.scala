@@ -96,8 +96,7 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("t11 heavy tokens: exact output on a planted Zipf corpus dir") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_heavy").toString
+    val dir = tempDir("heavy").toString
     // doc 0 carries the hot tokens; docs 1..200 carry 25 unique tail
     // tokens each -> total = 600 hot + 5000 tail, hot share ~10.7%
     val hotDoc = (0 until 3).flatMap(h => Seq.fill(200)(s"hot$h")).mkString(" ")

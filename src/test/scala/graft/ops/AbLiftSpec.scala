@@ -30,7 +30,7 @@ class AbLiftSpec extends SparkTestBase {
   test("w37: negative user_ids land in an arm (ADVICE r8 — Spark's % " +
       "would yield -1 and silently exclude them)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_w37").toString
+    val dir = tempDir("w37").toString
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     // user -3 (odd -> arm B) and user -4 (even -> arm A) both complete
     // the full view -> click -> purchase chain

@@ -8,7 +8,7 @@ class BlocklistSpec extends SparkTestBase {
   import spark.implicits._
 
   test("t22: hits, doc counts, rates, and zero-hit terms all present") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_t22").toString
+    val dir = tempDir("t22").toString
     // 4 docs: 'dup' appears 3x across 2 docs; 'skew' 1x in 1 doc;
     // the other 4 terms never -> zero rows must still appear
     Seq((1L, "dup dup scan"), (2L, "dup merge"), (3L, "skew join"),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t17_burstiness: dispersion separates clumping topical terms from
@@ -11,7 +10,7 @@ class BurstinessSpec extends SparkTestBase {
   import spark.implicits._
 
   test("t17: a clumping term outscores a thin-spread one at equal tf") {
-    val dir = Files.createTempDirectory("graft_t17").toString
+    val dir = tempDir("t17").toString
     // 'thin' once in each of 120 docs (tf 120, df 120, burstiness 1);
     // 'clump' 12 times in each of 10 docs (tf 120, df 10, burstiness 12);
     // 'rare' below the tf floor must not appear

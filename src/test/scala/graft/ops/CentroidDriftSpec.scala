@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** s21_centroid_drift: the direct measurement behind s19's retrain-due
@@ -11,7 +10,7 @@ class CentroidDriftSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(vecs: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("graft_s21").toString
+    val dir = tempDir("s21").toString
     vecs.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -13,7 +12,7 @@ class ChangepointSpec extends SparkTestBase {
   import spark.implicits._
 
   test("w31: a rate shift peaks the CUSUM at the regime boundary") {
-    val dir = Files.createTempDirectory("graft_w31").toString
+    val dir = tempDir("w31").toString
     // views: 1/hour for hours 0-9, then 5/hour for hours 10-19.
     // n=20, T=60; S'_h = cumsum(20x - 60): -40/hour down to -400 at
     // hour 9, +40/hour back to 0 -> peak |S'| = 400 at hour 9,

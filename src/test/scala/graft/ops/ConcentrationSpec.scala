@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** p24_source_concentration: HHI / Gini / top-share over per-source
@@ -11,7 +10,7 @@ class ConcentrationSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(masses: Seq[(String, Int)]): String = {
-    val dir = Files.createTempDirectory("graft_conc").toString
+    val dir = tempDir("conc").toString
     masses.zipWithIndex.map { case ((src, m), i) =>
       (i.toLong, src, Seq.fill(m)("w").mkString(" "))
     }.toDF("doc_id", "source", "text")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** d19_containment: the asymmetric near-dup audit. Plants the case the
@@ -13,7 +12,7 @@ class ContainmentSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(docs: Seq[(Long, String)], tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_cont_$tag").toString
+    val dir = tempDir(s"cont_$tag").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("planted"))

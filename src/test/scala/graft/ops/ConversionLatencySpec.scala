@@ -10,7 +10,7 @@ class ConversionLatencySpec extends SparkTestBase {
   import spark.implicits._
 
   test("w39: hand-computed per-arm percentile_disc picks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_w39").toString
+    val dir = tempDir("w39").toString
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val H = 3600L * 1000000L // one hour in micros
     // arm a (even ids): user 2 converts in 2h. arm b (odd): user 3 in

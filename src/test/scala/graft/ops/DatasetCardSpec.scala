@@ -24,7 +24,7 @@ class DatasetCardSpec extends SparkTestBase {
   }
 
   test("t20: long-document skew separates token_share from doc_share") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_t20").toString
+    val dir = tempDir("t20").toString
     // source s: 3 short French docs (2 tokens each), 1 long English doc
     // (18 tokens) -> en is 25% of docs but 75% of tokens
     val en = Seq.fill(18)("w").mkString(" ")

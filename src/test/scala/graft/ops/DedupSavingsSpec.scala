@@ -19,7 +19,7 @@ class DedupSavingsSpec extends SparkTestBase {
           r.getAs[Double]("token_share")))).toMap
 
   test("d28: identical triplet is both an exact and a near-dup family") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d28").toString
+    val dir = tempDir("d28").toString
     // 3 identical 24-token docs (J = 1.0 -> every LSH band collides, so
     // the near-dup pipeline is GUARANTEED to pair them); 2 unique docs
     val t = (1 to 24).map(i => s"tok$i").mkString(" ")
@@ -39,7 +39,7 @@ class DedupSavingsSpec extends SparkTestBase {
   }
 
   test("d28: zero-savings corpus reports honest zero rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d28z").toString
+    val dir = tempDir("d28z").toString
     Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("planted"))

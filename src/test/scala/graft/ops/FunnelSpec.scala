@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class FunnelSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   private def plant(rows: Seq[(Long, Timestamp, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_funnel").toString
+    val dir = tempDir("funnel").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")

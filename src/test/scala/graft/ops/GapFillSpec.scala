@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class GapFillSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   private def plant(rows: Seq[(Long, Timestamp, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_gapfill").toString
+    val dir = tempDir("gapfill").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class GapQuantilesSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   test("w30: hand-computed gap percentiles, no cross-user gap") {
-    val dir = Files.createTempDirectory("graft_w30").toString
+    val dir = tempDir("w30").toString
     Seq(
       // user 1 views at 0s, 10s, 30s, 100s -> gaps 10s, 20s, 70s
       (1L, ts("2024-07-01 00:00:00"), 1L, "view", 0.0),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t25_hapax_report: per-source hapax/dis/vocab lexical-diversity audit,
@@ -11,7 +10,7 @@ class HapaxReportSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(docs: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_hapax").toString
+    val dir = tempDir("hapax").toString
     docs.toDF("doc_id", "source", "text")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", lit(10L))

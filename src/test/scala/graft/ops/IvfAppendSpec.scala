@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** s19_ivf_append: incremental ANN index maintenance against a frozen
@@ -12,7 +11,7 @@ class IvfAppendSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(vecs: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("graft_ivfapp").toString
+    val dir = tempDir("ivfapp").toString
     vecs.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

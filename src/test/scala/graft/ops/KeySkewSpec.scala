@@ -8,7 +8,7 @@ class KeySkewSpec extends SparkTestBase {
   import spark.implicits._
 
   test("w40: top keys, shares, cumulative shares and skew ratios") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_w40").toString
+    val dir = tempDir("w40").toString
     def t(i: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:${i}%02d:00")
     // user 1: 6 events, user 2: 3, user 3: 1 -> n_rows 10, n_keys 3
     val uids = Seq.fill(6)(1L) ++ Seq.fill(3)(2L) ++ Seq(3L)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t15_langid_confusion: the classifier-audit matrix. Plants docs whose
@@ -14,7 +13,7 @@ class LangConfusionSpec extends SparkTestBase {
   test("t15: a mislabeled source shows up as an off-diagonal cell") {
     // two declared-en docs that are really French (le/la/et markers),
     // one genuine English doc, one genuine French doc
-    val dir = Files.createTempDirectory("graft_langconf").toString
+    val dir = tempDir("langconf").toString
     Seq(
       (1L, "le chat et la maison et le jardin", "en"),
       (2L, "la porte et le mur et les arbres", "en"),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** s18_margin_mining: mutual-best + absolute-margin pair mining. Plants
@@ -14,7 +13,7 @@ class MarginMiningSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(vecs: Seq[(Long, Seq[Float])]): String = {
-    val dir = Files.createTempDirectory("graft_margin").toString
+    val dir = tempDir("margin").toString
     vecs.toDF("vec_id", "embedding")
       .withColumn("label", lit(0))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

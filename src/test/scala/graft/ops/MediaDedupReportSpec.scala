@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** m07_media_dedup_report: the d18 discipline on the media channel.
@@ -29,7 +28,7 @@ class MediaDedupReportSpec extends SparkTestBase {
       if (!((i, j) == (0, 1)))
         assert(java.lang.Long.bitCount(sigs(i) ^ sigs(j)) > 1,
           s"planted texts $i and $j collide perceptually")
-    val dir = Files.createTempDirectory("graft_m07").toString
+    val dir = tempDir("m07").toString
     // doc_id % 3 picks the kind: 0/3/6/9/12 image, 1 audio, 2 video
     Seq(
       (0L, other),  // image, keeper of the exact pair below

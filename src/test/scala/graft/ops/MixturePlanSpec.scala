@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** p23_mixture_plan: temperature-smoothed (alpha = 1/2) source mixing.
@@ -15,7 +14,7 @@ class MixturePlanSpec extends SparkTestBase {
   test("p23: hand-computed plan on perfect-square token totals") {
     // src_a 16 tokens (w 4), src_b 9 (w 3), src_c 25 (w 5):
     // total_tokens 50, total_w 12
-    val dir = Files.createTempDirectory("graft_mix").toString
+    val dir = tempDir("mix").toString
     val words = (n: Int) => Seq.fill(n)("w").mkString(" ")
     Seq((1L, "src_a", words(8)), (2L, "src_a", words(8)),
       (3L, "src_b", words(9)), (4L, "src_c", words(25)))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** s28_mutual_knn: reciprocal top-3 edges over banded candidates. Plants
@@ -16,7 +15,7 @@ class MutualKnnSpec extends SparkTestBase {
   private def pad(v: Seq[Float]): Seq[Float] = v ++ Seq.fill(64 - v.size)(0f)
 
   private def plant(vecs: Seq[(Long, Seq[Float])]): String = {
-    val dir = Files.createTempDirectory("graft_mknn").toString
+    val dir = tempDir("mknn").toString
     vecs.map { case (id, v) => (id, pad(v)) }.toDF("vec_id", "embedding")
       .withColumn("label", lit(0))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

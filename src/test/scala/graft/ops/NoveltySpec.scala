@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t16_novelty: the crawl-order diversity curve. Hand-checks full /
@@ -14,7 +13,7 @@ class NoveltySpec extends SparkTestBase {
   private def word(i: Int): String = f"w$i%03d"
 
   test("t16: first doc is fully novel, a repeat is fully stale") {
-    val dir = Files.createTempDirectory("graft_novelty").toString
+    val dir = tempDir("novelty").toString
     val a = (0 until 10).map(word).mkString(" ")   // 7 grams, all novel
     val b = (5 until 15).map(word).mkString(" ")   // overlaps a's tail
     Seq((1L, a), (2L, b), (3L, a))                 // 3 repeats 1 verbatim

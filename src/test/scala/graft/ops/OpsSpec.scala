@@ -310,7 +310,7 @@ class OpsSpec extends SparkTestBase {
     // the canonical BPE example: low x5, lower x2, newest x6, widest x3.
     // Round 1: (e,s) and (s,t) tie at 9 -> lexicographic ('e','s').
     // Round 2: (es,t) 9. Round 3: (l,o) and (o,w) tie at 7 -> ('l','o').
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = tempDir("bpe").toString
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     Seq((1L, text)).toDF("doc_id", "text")
@@ -731,7 +731,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("retention: dry run only reports; bookkeeping files are never deleted") {
-    val dir = Files.createTempDirectory("graft_retention_guard")
+    val dir = tempDir("retention_guard")
     val data = dir.resolve("part-0001.parquet")
     val success = dir.resolve("_SUCCESS")
     val ckptDir = Files.createDirectory(dir.resolve(".checkpoint"))
@@ -871,7 +871,7 @@ class OpsSpec extends SparkTestBase {
     // df = 300 > maxDf = 100 -> dropped); query doc 100 and its twin 57
     // also share the bigram "rarexx999 mateyy999" (df = 2 -> kept), so
     // after the cut the twin is the ONLY lexical match for query 100.
-    val dir = Files.createTempDirectory("graft_s15_cap").toString
+    val dir = tempDir("s15_cap").toString
     val filler = "alpha bravo charlie delta echo foxtrot golf hotel"
     val docs = (1L to 300L).map { i =>
       val extra = if (i == 100L || i == 57L) " rarexx999 mateyy999" else ""
@@ -906,7 +906,7 @@ class OpsSpec extends SparkTestBase {
     // the degenerate-bigram guard must agree across engines (the oracle
     // states the same truncating-slice idiom); latent until a fixture
     // carries a 1-token doc, so plant one
-    val dir = Files.createTempDirectory("graft_p09_one").toString
+    val dir = tempDir("p09_one").toString
     Seq((1L, "solo"), (2L, "two tokens here and more of the and the"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("planted"))
@@ -1087,7 +1087,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("retention: deletes only files older than the cutoff") {
-    val dir = Files.createTempDirectory("graft_retention")
+    val dir = tempDir("retention")
     val old = dir.resolve("old.parquet"); val fresh = dir.resolve("new.parquet")
     Files.writeString(old, "x" * 100)
     Files.writeString(fresh, "y" * 50)

@@ -17,7 +17,7 @@ class PairGraphSpec extends SparkTestBase {
     * temp dir shaped like a testdata sf dir.
     */
   private def plant(docs: Seq[(Long, String)], tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_pg_$tag").toString
+    val dir = tempDir(s"pg_$tag").toString
     writeDocs(dir, docs)
     dir
   }
@@ -184,7 +184,7 @@ class PairGraphSpec extends SparkTestBase {
     val nearB = (100 until 176).map(word).mkString(" ") + " ya yb yc yd"
     val uniq1 = (500 until 580).map(word).mkString(" ")
     val uniq2 = (700 until 780).map(word).mkString(" ")
-    val dir = Files.createTempDirectory("graft_d18").toString
+    val dir = tempDir("d18").toString
     Seq((1L, shared, "s1"), (2L, shared, "s1"), (3L, nearA, "s1"),
       (4L, nearB, "s1"), (5L, uniq1, "s1"), (6L, uniq2, "s2"))
       .toDF("doc_id", "text", "source")

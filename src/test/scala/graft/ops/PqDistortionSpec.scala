@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** s29_pq_distortion: per-(subspace, codeword) reconstruction error.
@@ -15,7 +14,7 @@ class PqDistortionSpec extends SparkTestBase {
   private def const(v: Float): Seq[Float] = Seq.fill(64)(v)
 
   private def plant(vecs: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("graft_pqd").toString
+    val dir = tempDir("pqd").toString
     vecs.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -29,7 +29,7 @@ class PreferencePairsSpec extends SparkTestBase {
   }
 
   test("p22: hand-computed pairs on a quality ladder; no self-pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_p22").toString
+    val dir = tempDir("p22").toString
     // source s: 5 docs with strictly decreasing lexical diversity.
     // qualities (distinct*1e6 div n): doc0 "a b c d" -> 1e6,
     // doc1 "a b c c" -> 750000, doc2 "a b b b" -> 500000,

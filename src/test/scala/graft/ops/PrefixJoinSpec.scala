@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -17,7 +16,7 @@ class PrefixJoinSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(docs: Seq[(Long, String)], tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_pfx_$tag").toString
+    val dir = tempDir(s"pfx_$tag").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("planted"))

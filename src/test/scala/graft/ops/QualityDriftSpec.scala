@@ -8,7 +8,7 @@ class QualityDriftSpec extends SparkTestBase {
   import spark.implicits._
 
   test("d27: a planted incoming-quality collapse shows up as TVD mass") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d27").toString
+    val dir = tempDir("d27").toString
     // reference docs (ids 2..9, % 10 >= 2): fully distinct tokens ->
     // quality 1e6 -> bin 10. incoming (ids 10, 11 -> % 10 < 2):
     // "a a a a" -> 250000 -> bin 2.

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** p18_quarantine_split: the contamination firewall at the split.
@@ -12,7 +11,7 @@ class QuarantineSplitSpec extends SparkTestBase {
   import spark.implicits._
 
   test("p18: a benchmark near-copy quarantines, the benchmark labels itself") {
-    val dir = Files.createTempDirectory("graft_p18").toString
+    val dir = tempDir("p18").toString
     def run(a: Int, b: Int): String = (a until b).map(i => s"tok$i").mkString(" ")
     val benchText = run(0, 30)
     Seq(

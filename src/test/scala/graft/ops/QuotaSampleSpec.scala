@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** p17_quota_sample: Hamilton largest-remainder apportionment + salted
@@ -15,7 +14,7 @@ class QuotaSampleSpec extends SparkTestBase {
   test("p17: hand-computed quotas on an unbalanced corpus") {
     // sources 165/90/45 (total 300), N=207: bases 113/62/31 (sum 206),
     // remainders 255/30/15 -> the one extra seat goes to src_a
-    val dir = Files.createTempDirectory("graft_quota").toString
+    val dir = tempDir("quota").toString
     val docs = (0 until 165).map(i => (i.toLong, "src_a")) ++
       (0 until 90).map(i => (1000L + i, "src_b")) ++
       (0 until 45).map(i => (2000L + i, "src_c"))

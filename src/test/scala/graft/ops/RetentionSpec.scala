@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -18,7 +17,7 @@ class RetentionSpec extends SparkTestBase {
     // 2024-03-04 and 2024-03-11 are Mondays (ISO week starts).
     // cohort A = {1, 2} first seen wk0; user 1 returns wk1 and wk2,
     // user 2 never returns. cohort B = {3} first seen wk1, returns wk2.
-    val dir = Files.createTempDirectory("graft_retention").toString
+    val dir = tempDir("retention").toString
     Seq(
       (1L, ts("2024-03-04 10:00:00"), 1L, "view", 0.0),
       (2L, ts("2024-03-05 10:00:00"), 2L, "view", 0.0),

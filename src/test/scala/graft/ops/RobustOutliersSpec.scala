@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class RobustOutliersSpec extends SparkTestBase {
   import spark.implicits._
 
   test("w29: the outlier flags against a baseline it cannot inflate") {
-    val dir = Files.createTempDirectory("graft_w29").toString
+    val dir = tempDir("w29").toString
     val vals = Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 1000.0)
     vals.zipWithIndex.map { case (v, i) =>
       (i.toLong, Timestamp.valueOf("2024-06-01 10:00:00"), 1L, "view", v)

@@ -39,7 +39,7 @@ class ShardAppendSpec extends SparkTestBase {
   test("m09: an empty corpus slice packs the batch from byte 0 " +
       "(ADVICE r8 — NULL base)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_m09").toString
+    val dir = tempDir("m09").toString
     // every doc_id = 7 (mod 10): the whole table is "today's batch"
     Seq((7L, "abcd"), (17L, "efghij")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("planted"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t26_simpson_diversity: per-source Simpson concentration and
@@ -11,7 +10,7 @@ class SimpsonDiversitySpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(docs: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_simpson").toString
+    val dir = tempDir("simpson").toString
     docs.toDF("doc_id", "source", "text")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", lit(10L))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** d24_source_overlap: the procurement-level duplication question.
@@ -12,7 +11,7 @@ class SourceOverlapSpec extends SparkTestBase {
   import spark.implicits._
 
   test("d24: a mirrored feed lights up, an independent one stays dark") {
-    val dir = Files.createTempDirectory("graft_d24").toString
+    val dir = tempDir("d24").toString
     def run(a: Int, n: Int): String =
       (a until a + n).map(i => s"tok$i").mkString(" ")
     val sharedText = run(0, 20)

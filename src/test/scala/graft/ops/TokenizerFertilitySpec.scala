@@ -16,7 +16,7 @@ class TokenizerFertilitySpec extends SparkTestBase {
     // same word frequencies as OpsSpec's t13 fixture (merges: e+s,
     // es+t, l+o) but 'low'x5 + 'lower'x2 declared en, 'newest'x6 +
     // 'widest'x3 declared de.
-    val dir = java.nio.file.Files.createTempDirectory("graft_t19").toString
+    val dir = tempDir("t19").toString
     val en = (Seq.fill(5)("low") ++ Seq.fill(2)("lower")).mkString(" ")
     val de = (Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     Seq((1L, en, "en"), (2L, de, "de")).toDF("doc_id", "text", "lang")

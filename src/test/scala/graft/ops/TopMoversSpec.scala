@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -13,7 +12,7 @@ class TopMoversSpec extends SparkTestBase {
   import spark.implicits._
 
   test("w32: a stopping type shows -100%, a zero base yields NULL growth") {
-    val dir = Files.createTempDirectory("graft_w32").toString
+    val dir = tempDir("w32").toString
     // weeks (Mondays): 03-04, 03-11, 03-18. 'view': 4, 2, 0 events ->
     // deltas -2 (-50%) then -2 (-100%). 'click': 1, 0, 3 -> the week-3
     // row has prev_n = 0: delta +3, growth NULL (integer zero test).

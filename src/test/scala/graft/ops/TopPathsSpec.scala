@@ -8,7 +8,7 @@ class TopPathsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("w41: trigrams stay within a user's stream and rank by count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_w41").toString
+    val dir = tempDir("w41").toString
     def t(i: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:${i}%02d:00")
     // user 1: v c p v c p -> trigrams vcp x2, cpv, pvc
     // user 2: v c p       -> vcp

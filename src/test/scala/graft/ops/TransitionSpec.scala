@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class TransitionSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   test("w28: hand-computed transitions, no cross-user steps") {
-    val dir = Files.createTempDirectory("graft_trans").toString
+    val dir = tempDir("trans").toString
     Seq(
       // user 1: view -> click -> view  (steps: v->c, c->v)
       (1L, ts("2024-04-01 10:00:00"), 1L, "view", 0.0),

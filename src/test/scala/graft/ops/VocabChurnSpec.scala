@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t24_vocab_churn: snapshot vocabulary drift on d27's split rule
@@ -11,7 +10,7 @@ class VocabChurnSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plant(docs: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft_churn").toString
+    val dir = tempDir("churn").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("src"))

@@ -8,7 +8,7 @@ class VocabGrowthSpec extends SparkTestBase {
   import spark.implicits._
 
   test("t21: decile cuts, cumulative vocab and per-decile deltas") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_t21").toString
+    val dir = tempDir("t21").toString
     // 10 docs (ids 0..9), decile d covers ids < d. Novel tokens per
     // doc: doc0 {a b}, doc1 {c}, doc2 {} (repeats), doc3 {d}, docs 4-9
     // nothing new -> vocab 2,3,3,4,4,4,4,4,4,4

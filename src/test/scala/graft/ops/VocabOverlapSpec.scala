@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** t23_vocab_overlap: pairwise source-vocabulary Jaccard. Plants three
@@ -14,7 +13,7 @@ class VocabOverlapSpec extends SparkTestBase {
   import spark.implicits._
 
   test("t23: hand-computed matrix with a zero-overlap source kept") {
-    val dir = Files.createTempDirectory("graft_vocab").toString
+    val dir = tempDir("vocab").toString
     Seq(
       (1L, "src_a", "x x y z"), // duplicate x counts once: vocab {x,y,z}
       (2L, "src_b", "x y w"),   // vocab {x,y,w}: common {x,y}

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** d21_winnowing: the MOSS fingerprint index. Pins the two guarantees
@@ -17,7 +16,7 @@ class WinnowingSpec extends SparkTestBase {
   private val P = 1000000007L
 
   private def plant(docs: Seq[(Long, String)], tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_winnow_$tag").toString
+    val dir = tempDir(s"winnow_$tag").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("planted"))

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Runtime re-planning proofs — the two AQE/optimizer mechanisms that
@@ -54,14 +53,14 @@ class AdaptiveSpec extends SparkTestBase {
     // fact partitioned by day; a selective dim filter must reach the
     // fact scan as a runtime partition filter (dynamicpruning), not
     // after a full scan — at 100 TB this is reading 1 partition vs 365.
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("dpp").toString
     spark.range(10000)
       .select(col("id"), (col("id") % 10).cast("int").as("d"))
       .write.mode("overwrite").partitionBy("d").parquet(dir)
     val fact = spark.read.parquet(dir)
     // the dim must be a real file source: a LocalRelation's filter is
     // constant-folded away, so DPP would see no selective predicate
-    val dimDir = Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("dpp_dim").toString
     (0 until 10).map(d => (d, if (d == 3) 1 else 0))
       .toDF("d", "keep").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)

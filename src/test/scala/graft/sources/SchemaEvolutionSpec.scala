@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** SchemaEvolution.readEvolved: additive evolution with defaults, the
@@ -12,7 +11,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   import spark.implicits._
 
   test("evolved read unifies batches and fills pre-evolution rows") {
-    val root = Files.createTempDirectory("graft_evolve").toString
+    val root = tempDir("evolve").toString
     // batch 1: original schema
     Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name")
       .write.mode("append").parquet(root)
@@ -31,7 +30,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   test("genuine NULLs in post-evolution batches are preserved") {
     // ADVICE r7: the fill must be vintage-gated — a NULL written by a
     // batch that HAS the column is data, not a pre-evolution gap.
-    val root = Files.createTempDirectory("graft_evolve4").toString
+    val root = tempDir("evolve4").toString
     Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name")
       .write.mode("append").parquet(root)
     Seq((3L, "gamma", Some(0.9)), (5L, "eps", Option.empty[Double]))
@@ -45,7 +44,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("the hazard: a plain read of mixed vintages can drop the new column") {
-    val root = Files.createTempDirectory("graft_evolve2").toString
+    val root = tempDir("evolve2").toString
     Seq((1L, "a")).toDF("id", "name").write.mode("append").parquet(root)
     Seq((2L, "b", 1.0)).toDF("id", "name", "quality")
       .write.mode("append").parquet(root)
@@ -58,7 +57,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
 
   test("hive-partitioned roots keep partition-path columns through the " +
       "vintage-grouped read (ADVICE r8)") {
-    val root = Files.createTempDirectory("graft_evolve5").toString
+    val root = tempDir("evolve5").toString
     // two partitions, evolving mid-life: day=1 predates quality
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.mode("append").parquet(s"$root/day=1")
@@ -74,7 +73,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("a same-named default never clobbers a partition column") {
-    val root = Files.createTempDirectory("graft_evolve6").toString
+    val root = tempDir("evolve6").toString
     Seq((1L, "a")).toDF("id", "name")
       .write.mode("append").parquet(s"$root/day=7")
     val df = SchemaEvolution.readEvolved(spark, root,
@@ -85,7 +84,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("an empty root fails loudly (ADVICE r8 — reduce on empty groups)") {
-    val root = Files.createTempDirectory("graft_evolve7").toString
+    val root = tempDir("evolve7").toString
     val e = intercept[IllegalArgumentException] {
       SchemaEvolution.readEvolved(spark, root, Map("q" -> lit(1)))
     }
@@ -93,7 +92,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("type conflicts fail loudly, not silently cast") {
-    val root = Files.createTempDirectory("graft_evolve3").toString
+    val root = tempDir("evolve3").toString
     Seq((1L, 10)).toDF("id", "metric").write.mode("append").parquet(root)
     Seq((2L, "ten")).toDF("id", "metric")
       .write.mode("append").parquet(root)

@@ -30,13 +30,13 @@ class SourcesSpec extends SparkTestBase {
     assert(hc.get("fs.s3a.endpoint") == "http://localhost:9000")
     assert(hc.get("fs.s3a.path.style.access") == "true")
     assert(hc.get("fs.s3a.impl") == "org.apache.hadoop.fs.s3a.S3AFileSystem")
-    val dir = Files.createTempDirectory("graft_local_fallback")
+    val dir = tempDir("local_fallback")
     Seq((1, "a")).toDF("id", "v").write.mode("overwrite").parquet(dir.toString)
     assert(spark.read.parquet(dir.toString).count() == 1)
   }
 
   test("S12+P14: multiLine nested JSON -> explode -> dimension join (J4)") {
-    val dir = Files.createTempDirectory("graft_gbfs")
+    val dir = tempDir("gbfs")
     val json =
       """{"data": {"stations": [
         |  {"station_id": "A", "name": "Alpha", "capacity": 20, "lat": 48.8, "lon": 2.3},
@@ -72,13 +72,13 @@ class SourcesSpec extends SparkTestBase {
       .select("event_id", "user_id", "event_type", "value")
     val expected = ev.orderBy("event_id").collect()
 
-    val csvDir = Files.createTempDirectory("graft_csv").toString
+    val csvDir = tempDir("csv").toString
     ev.write.mode("overwrite").option("header", "true").csv(csvDir)
     val csvBack = spark.read.schema(ev.schema)
       .option("header", "true").csv(csvDir)
     assert(csvBack.orderBy("event_id").collect().sameElements(expected))
 
-    val orcDir = Files.createTempDirectory("graft_orc").toString
+    val orcDir = tempDir("orc").toString
     ev.write.mode("overwrite").orc(orcDir)
     val orcBack = spark.read.orc(orcDir)
     assert(orcBack.orderBy("event_id").collect().sameElements(expected))
@@ -90,7 +90,7 @@ class SourcesSpec extends SparkTestBase {
     // the two write-side controls a 100 TB pipeline sets on every sink:
     // bounded records per file (no gigafile stragglers; compaction's
     // write-time complement) and a modern codec
-    val dir = Files.createTempDirectory("graft_writer").toString
+    val dir = tempDir("writer").toString
     val df = spark.range(1000).toDF("id")
     df.coalesce(1).write.mode("overwrite")
       .option("maxRecordsPerFile", 100)
@@ -109,7 +109,7 @@ class SourcesSpec extends SparkTestBase {
     // the real ingestion path for an image/audio corpus: whole files as
     // (path, modificationTime, length, content) rows, extension-filtered
     // at the source so non-media files never enter the pipeline
-    val dir = Files.createTempDirectory("graft_binfiles")
+    val dir = tempDir("binfiles")
     java.nio.file.Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(dir.resolve("b.img"), Array[Byte](4, 5))
     java.nio.file.Files.write(dir.resolve("skip.txt"), Array[Byte](9))
@@ -136,7 +136,7 @@ class SourcesSpec extends SparkTestBase {
   test("S12: corrupt JSON records are captured, not fatal (PERMISSIVE)") {
     // at 100 TB some records WILL be malformed; the job must keep going
     // and quarantine them, not die (PERMISSIVE + columnNameOfCorruptRecord)
-    val dir = Files.createTempDirectory("graft_corrupt")
+    val dir = tempDir("corrupt")
     java.nio.file.Files.write(dir.resolve("part.json"),
       Seq(
         """{"id": 1, "v": "ok"}""",
@@ -162,7 +162,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("S10/P12: date filter partition-prunes a partitioned table scan") {
-    val dir = Files.createTempDirectory("graft_prune").toFile.getAbsolutePath + "/t"
+    val dir = tempDir("prune").toFile.getAbsolutePath + "/t"
     Seq(("A", 1, "2024-01-01"), ("B", 2, "2024-01-02"), ("C", 3, "2024-01-03"))
       .toDF("station_code", "bikes_available", "d")
       .withColumn("date", col("d").cast("date")).drop("d")
@@ -186,7 +186,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("z-order layout: a 2-D query box prunes to the intersecting buckets") {
     import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_zorder").toFile.getAbsolutePath
+    val dir = tempDir("zorder").toFile.getAbsolutePath
     // full 256x256 grid, one row per cell — every bucket exactly 1024 rows
     val base = spark.range(65536).select(
       expr("id div 256").as("x"), (col("id") % 256).as("y"))
@@ -221,7 +221,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("schema evolution: mergeSchema unions old and new partition schemas") {
-    val dir = Files.createTempDirectory("graft_evolve").toFile.getAbsolutePath + "/t"
+    val dir = tempDir("evolve").toFile.getAbsolutePath + "/t"
     // old partition: no ebike column; new partition adds it
     Seq(("A", 5)).toDF("station_code", "bikes_available")
       .write.parquet(s"$dir/date=2024-01-01")
@@ -262,7 +262,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("upsertPartitions: dynamic overwrite touches only the updated partitions") {
-    val dir = Files.createTempDirectory("graft_upsert").toFile.getAbsolutePath + "/t"
+    val dir = tempDir("upsert").toFile.getAbsolutePath + "/t"
     def mk(rows: Seq[(String, Int, String)]) =
       rows.toDF("station_code", "bikes_available", "d")
         .withColumn("date", col("d").cast("date")).drop("d")
@@ -278,7 +278,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("compactPartition: many small files become one, same rows") {
-    val dir = Files.createTempDirectory("graft_compact").toFile.getAbsolutePath + "/t"
+    val dir = tempDir("compact").toFile.getAbsolutePath + "/t"
     val df = (1 to 40).map(i => (s"S$i", i, "2024-01-01")).toSeq
       .toDF("station_code", "bikes_available", "d")
       .withColumn("date", col("d").cast("date")).drop("d")

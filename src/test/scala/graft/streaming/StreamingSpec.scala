@@ -48,7 +48,7 @@ class StreamingSpec extends SparkTestBase {
     // the knob that keeps a 100 TB backfill from loading every file into
     // one giant micro-batch: 3 files + maxFilesPerTrigger=1 must process
     // in >= 3 micro-batches, all rows exactly once
-    val dir = Files.createTempDirectory("graft_paced")
+    val dir = tempDir("paced")
     (0 until 3).foreach { i =>
       spark.range(i * 10, i * 10 + 10).toDF("id")
         .coalesce(1).write.parquet(s"$dir/f$i")
@@ -68,7 +68,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("runStream: AvailableNow drains all files once; checkpoint restart is exactly-once") {
-    val dir = Files.createTempDirectory("graft_stream").toFile.getAbsolutePath
+    val dir = tempDir("stream").toFile.getAbsolutePath
     val in = s"$dir/in"; val out = s"$dir/out"; val cp = s"$dir/cp"
     new java.io.File(in).mkdirs()
     def record(code: String, due: String): String =

@@ -15,6 +15,16 @@ class VelibPipelineSpec extends SparkTestBase {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** One status record as the feed's JSON line. */
+  private def rec(code: String, bikes: Int, due: String): String =
+    s"""{"stationcode":"$code","name":"S$code","numdocksavailable":10,""" +
+      s""""numbikesavailable":$bikes,"mechanical":$bikes,"ebike":0,""" +
+      s""""duedate":"$due"}"""
+
+  private def writeTick(in: String, name: String, recs: String*): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/$name"),
+      recs.mkString("\n"))
+
   // station_code, station_name, bikes_available, docks_available,
   // last_reported, seq
   private lazy val silver = Seq(
@@ -57,6 +67,7 @@ class VelibPipelineSpec extends SparkTestBase {
   }
 
   test("enrich plan: both RANGE frames collapse into ONE Window exec") {
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // the q02 chain's cost driver: moving_avg_1h and baseline_avg share
@@ -79,6 +90,11 @@ class VelibPipelineSpec extends SparkTestBase {
       val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
       assert(shuffles.length == 1,
         s"enrichment must cost a single station_code shuffle:\n$plan")
+      // the lag orders by (micros, seq), so its sort also serves the
+      // RANGE frames ordered by micros alone: one sort total
+      val sorts = plan.collect { case s: SortExec => s }
+      assert(sorts.length == 1,
+        s"lag and both RANGE frames must share one sort:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -107,13 +123,9 @@ class VelibPipelineSpec extends SparkTestBase {
   }
 
   test("end-to-end stream: a fresh status file flips the station's alert level") {
-    val root = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val root = tempDir("e2e").toString
     val in = s"$root/in"
     new java.io.File(in).mkdirs()
-    def rec(code: String, bikes: Int, due: String): String =
-      s"""{"stationcode":"$code","name":"S$code","numdocksavailable":10,""" +
-        s""""numbikesavailable":$bikes,"mechanical":$bikes,"ebike":0,""" +
-        s""""duedate":"$due"}"""
     // drain 1: station A declines 5 -> 1 (WARNING_LOW: bikes<3, trend<=0),
     // station B stays healthy
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/t0.jsonl"),
@@ -147,14 +159,120 @@ class VelibPipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$root/silver").count() == 4L)
   }
 
-  test("incremental e2e: gold snapshot is bit-identical to the batch recompute") {
-    val root = java.nio.file.Files.createTempDirectory("graft_e2e_inc").toString
+  test("re-send tie: runEndToEnd's gold and serving equal the batch " +
+      "recompute when a station's latest reading is a verbatim re-send") {
+    val root = tempDir("e2e_resend").toString
     val in = s"$root/in"
     new java.io.File(in).mkdirs()
-    def rec(code: String, bikes: Int, due: String): String =
-      s"""{"stationcode":"$code","name":"S$code","numdocksavailable":10,""" +
-        s""""numbikesavailable":$bikes,"mechanical":$bikes,"ebike":0,""" +
-        s""""duedate":"$due"}"""
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    // the comparison perfbench's velib check makes: the drained lake
+    // against GoldAlerts / Serving over a batch parse of every input file
+    def assertEqualsBatch(): Unit = {
+      val batch = SilverJob.parseRaw(
+        spark.read.schema("value STRING").text(in))
+      val enrichedBatch = EnrichJob.enrich(Pipeline.canonical(batch), col("seq"))
+      val goldBatch = GoldAlerts.alerts(enrichedBatch, col("seq"))
+      val gold = spark.read.parquet(s"$root/gold")
+      assert(rows(gold.select(goldBatch.columns.toSeq.map(col): _*)) ==
+        rows(goldBatch))
+      try {
+        val servingBatch =
+          Serving.criticalAlerts(goldBatch, enrichedBatch, col("seq"))
+        assert(rows(spark.read.parquet(s"$root/serving")
+          .select(servingBatch.columns.toSeq.map(col): _*)) ==
+          rows(servingBatch))
+      } finally graft.Caches.unpersistAll()
+    }
+    // drain 1: A declines 5 -> 1 and B 4 -> 2, both WARNING_LOW
+    writeTick(in, "t0.jsonl",
+      rec("A", 5, "2024-03-01T10:00:00+00:00"),
+      rec("A", 1, "2024-03-01T10:30:00+00:00"),
+      rec("B", 4, "2024-03-01T10:00:00+00:00"),
+      rec("B", 2, "2024-03-01T10:30:00+00:00"))
+    assert(Pipeline.runEndToEnd(spark, in, root) == 4L)
+    assertEqualsBatch()
+    // drain 2: A re-sends its 10:30 record verbatim (the copies tie on
+    // last_reported and seq across two silver files); B empties and
+    // re-sends that new record inside the same file
+    writeTick(in, "t1.jsonl",
+      rec("A", 1, "2024-03-01T10:30:00+00:00"),
+      rec("B", 0, "2024-03-01T11:00:00+00:00"),
+      rec("B", 0, "2024-03-01T11:00:00+00:00"))
+    assert(Pipeline.runEndToEnd(spark, in, root) == 3L)
+    assertEqualsBatch()
+    val levels = spark.read.parquet(s"$root/gold")
+      .select("station_code", "alert_level").as[(String, String)]
+      .collect().toMap
+    assert(levels == Map("A" -> "WARNING_LOW", "B" -> "CRITICAL_EMPTY"))
+  }
+
+  test("drain plan: the gold write runs no Window inside a single-task " +
+      "Coalesce") {
+    import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // descend through AQE wrappers; `stopAtExchange` ends the walk at a
+    // stage boundary (an exchange, or the query stage AQE put in its place)
+    def exists(p: SparkPlan, stopAtExchange: Boolean)(
+        hit: SparkPlan => Boolean): Boolean = hit(p) || (p match {
+      case _: Exchange | _: QueryStageExec if stopAtExchange => false
+      case a: AdaptiveSparkPlanExec =>
+        exists(a.executedPlan, stopAtExchange)(hit)
+      case q: QueryStageExec => exists(q.plan, stopAtExchange)(hit)
+      case _ => p.children.exists(exists(_, stopAtExchange)(hit))
+    })
+    def isWindow(p: SparkPlan) = p.isInstanceOf[WindowExec]
+    val goldWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        // AQE wraps the whole write: the command sits inside its plan
+        if (exists(qe.executedPlan, stopAtExchange = false) {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+            c.outputPath.getName == "gold"
+          case _ => false
+        }) goldWrites.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val root = tempDir("e2e_plan").toString
+    val in = s"$root/in"
+    new java.io.File(in).mkdirs()
+    writeTick(in, "t0.jsonl",
+      rec("A", 5, "2024-03-01T10:00:00+00:00"),
+      rec("A", 1, "2024-03-01T10:30:00+00:00"),
+      rec("B", 9, "2024-03-01T10:30:00+00:00"))
+    // registered before the drain: the stream's session clones the
+    // listener list when the query starts
+    spark.listenerManager.register(listener)
+    try {
+      assert(Pipeline.runEndToEnd(spark, in, root) == 3L)
+      // listener events arrive asynchronously on the listener bus
+      val deadline = System.currentTimeMillis() + 10000
+      while (goldWrites.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!goldWrites.isEmpty, "no gold write was captured")
+    goldWrites.forEach { plan =>
+      assert(exists(plan, stopAtExchange = false)(isWindow),
+        s"the captured gold write runs no Window:\n$plan")
+      val single = exists(plan, stopAtExchange = false) {
+        case c: CoalesceExec =>
+          c.numPartitions == 1 && exists(c.child, stopAtExchange = true)(isWindow)
+        case _ => false
+      }
+      assert(!single, "a Coalesce 1 pulls the enrichment windows into one " +
+        s"task:\n$plan")
+    }
+  }
+
+  test("incremental e2e: gold snapshot is bit-identical to the batch recompute") {
+    val root = tempDir("e2e_inc").toString
+    val in = s"$root/in"
+    new java.io.File(in).mkdirs()
     def goldSet(r: String): Set[String] =
       spark.read.parquet(s"$r/gold").collect()
         .map(_.mkString("|")).toSet
@@ -194,13 +312,9 @@ class VelibPipelineSpec extends SparkTestBase {
 
   test("incremental e2e: crash between state write and gold write, then " +
       "restart -> gold still bit-identical to the batch recompute") {
-    val root = java.nio.file.Files.createTempDirectory("graft_e2e_crash").toString
+    val root = tempDir("e2e_crash").toString
     val in = s"$root/in"
     new java.io.File(in).mkdirs()
-    def rec(code: String, bikes: Int, due: String): String =
-      s"""{"stationcode":"$code","name":"S$code","numdocksavailable":10,""" +
-        s""""numbikesavailable":$bikes,"mechanical":$bikes,"ebike":0,""" +
-        s""""duedate":"$due"}"""
     def goldSet(r: String): Set[String] =
       spark.read.parquet(s"$r/gold").collect()
         .map(_.mkString("|")).toSet
